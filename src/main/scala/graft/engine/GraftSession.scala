@@ -37,8 +37,8 @@ final case class GraftConfig(
     maxRetries: Int = 3,
     showSql: Boolean = false,
     anonymizeHead: Boolean = false,
-    // exact df.count() per table per ask (reference shape parity; flip off
-    // at large scale to use free optimizer stats / "unknown" instead)
+    // exact df.count() per table per uncached ask (reference shape parity;
+    // flip off at large scale to use free optimizer stats / "unknown")
     exactRowCount: Boolean = true,
     // generated SQL may ONLY call these functions — DEFAULT ON with the
     // curated deterministic analytics surface, matching the reference's
@@ -154,10 +154,12 @@ final class GraftSession(
     * (reference `_logs` / `last_error` parity); also attached to the
     * returned Answer. */
   @volatile var lastAttempts: Seq[Attempt] = Nil
+  /** Appended under its own lock: concurrent asks on one session all log
+    * here. Readers racing a live ask should lock it too. */
   val logs: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
 
   private def log(msg: String): Unit = {
-    logs += msg
+    logs.synchronized { logs += msg }
     if (config.verbose) println(s"[graft] $msg")
   }
 
@@ -182,12 +184,14 @@ final class GraftSession(
     lastAttempts = Nil
     try {
       tables0.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-      val tables = tables0.map { case (n, df) =>
+      // A description costs a row count and a head collect per table, and
+      // only prompts read it: a cache hit whose SQL runs clean builds none.
+      lazy val tables = tables0.map { case (n, df) =>
         Prompts.describe(n, df, anonymize = config.anonymizeHead,
           exactRowCount = config.exactRowCount) }
       val names = tables0.map(_._1)
 
-      val key = cacheKey(question, tables)
+      val key = cacheKey(question, tables0)
       val cached = if (config.enableCache) cache.get(key) else None
       val sql0 = cached.getOrElse(generate(question, tables))
       if (config.showSql) println(sql0)
@@ -249,7 +253,7 @@ final class GraftSession(
     * Returns the frame, the SQL that actually succeeded, and the collected
     * preview rows (so render doesn't re-execute). */
   private def run(question: String, firstSql: String,
-      tables: Seq[Prompts.TableCtx],
+      tables: => Seq[Prompts.TableCtx],
       views: Set[String]): Either[GraftError, (DataFrame, String, Array[org.apache.spark.sql.Row])] = {
     var sql = firstSql
     var lastErr = ""
@@ -303,8 +307,12 @@ final class GraftSession(
     "Unfortunately, I was not able to answer your question, " +
       s"because of the following error:\n\n$err\n"
 
-  private def cacheKey(question: String, tables: Seq[Prompts.TableCtx]): String = {
-    val fingerprint = tables.map(t => s"${t.name}:${t.head.linesIterator.take(1).mkString}")
+  /** MD5 of `question||name:header|…`, from schemas alone: it runs no Spark
+    * job. The header is cut at its first line break (a column name may hold
+    * one) so keys stay byte-identical to those in existing cachePath files. */
+  private def cacheKey(question: String, tables: Seq[(String, DataFrame)]): String = {
+    val fingerprint = tables.map { case (n, df) =>
+      s"$n:${Prompts.schemaHeader(df).linesIterator.take(1).mkString}" }
       .mkString("|")
     MessageDigest.getInstance("MD5")
       .digest(s"$question||$fingerprint".getBytes("UTF-8"))

@@ -43,9 +43,7 @@ object Prompts {
     * and dtypes but no data leaves the cluster in prompts. */
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
-    val fields = df.schema.fields
-    val header = fields.map(f => s"${f.name} (${f.dataType.simpleString})")
-      .mkString(" | ")
+    val header = schemaHeader(df)
     def mask(v: Any, rowIdx: Int): String = v match {
       case null => "null"
       case _: String => s"str_$rowIdx"
@@ -60,9 +58,21 @@ object Prompts {
         else if (v == null) "null" else v.toString
       }.mkString(" | ")
     }
-    TableCtx(name, rowCount(df, exactRowCount), fields.length,
+    TableCtx(name, rowCount(df, exactRowCount), df.schema.fields.length,
       (header +: rows).mkString("\n"))
   }
+
+  /** The schema line that opens `describe`'s table text:
+    * `name (type) | name (type) | …`. Runs no Spark job. */
+  def schemaHeader(df: DataFrame): String =
+    df.schema.fields.map(f => s"${f.name} (${f.dataType.simpleString})")
+      .mkString(" | ")
+
+  /** The per-table block shared by the generation and correction prompts. */
+  private def tableBlock(tables: Seq[TableCtx]): String =
+    tables.map(t =>
+      s"Table `${t.name}`, with ${t.rowsText} rows and ${t.cols} columns. " +
+        s"Schema and first rows:\n${t.head}").mkString("\n\n")
 
   val GenerateSqlKey = "generate_sql"
   val CorrectErrorKey = "correct_error"
@@ -72,13 +82,10 @@ object Prompts {
     * today's date like generate_python_code.py:33). */
   def generateSql(question: String, tables: Seq[TableCtx],
       today: LocalDate = LocalDate.now()): String = {
-    val tb = tables.map(t =>
-      s"Table `${t.name}`, with ${t.rowsText} rows and ${t.cols} columns. " +
-        s"Schema and first rows:\n${t.head}").mkString("\n\n")
     s"""Today is $today.
        |You are provided with the following tables, registered as Spark SQL views:
        |
-       |$tb
+       |${tableBlock(tables)}
        |
        |When asked about the data, your response should be a single Spark SQL
        |SELECT query over those views, wrapped in ```sql fences. Do not use
@@ -93,10 +100,7 @@ object Prompts {
     * (correct_error_prompt.py:29-45): failed code + engine error fed back. */
   def correctError(question: String, failedSql: String, error: String,
       tables: Seq[TableCtx]): String = {
-    val tb = tables.map(t =>
-      s"Table `${t.name}`, with ${t.rowsText} rows and ${t.cols} columns. " +
-        s"Schema and first rows:\n${t.head}").mkString("\n\n")
-    s"""$tb
+    s"""${tableBlock(tables)}
        |
        |The user asked: $question
        |You generated this Spark SQL query:

@@ -346,6 +346,55 @@ class EngineSpec extends SparkSpec {
     assert(llm3.callCount == 1, "clearCache must empty the file too")
   }
 
+  test("a cache hit runs no describe work; a cold ask still does") {
+    // Every evaluation of the frame bumps the accumulator once per row, and
+    // accumulators are merged before collect returns, so deltas are exact.
+    val scanned = spark.sparkContext.longAccumulator("scanned")
+    val seen = org.apache.spark.sql.functions.udf { (a: Long) => scanned.add(1); true }
+    val df = spark.range(1, 6, 1, 1).toDF("a").filter(seen($"a"))
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm)
+    def delta(q: String): Long = {
+      val before = scanned.value
+      assert(s.ask(df, q).text == "5")
+      scanned.value - before
+    }
+    val cold = delta("how many rows?")
+    assert(llm.lastPrompt.get.contains("with 5 rows"), llm.lastPrompt.get)
+    val hit = delta("how many rows?")
+    assert(llm.callCount == 1)
+    assert(hit == 5, "a hit scans the frame once: the result query")
+    assert(cold == 15, "a cold ask scans for the count, the head and the result")
+  }
+
+  test("cache key format on disk is unchanged; a failing cached SQL " +
+      "builds the full table block for its correction") {
+    val path = java.nio.file.Files.createTempFile("graft_cache_key", ".json")
+    try {
+      val question = "how many rows?"
+      val key = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$question||df:a (int) | fruits (string) | b (int)".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      java.nio.file.Files.write(path,
+        s"""{"$key": "SELECT nope FROM df"}""".getBytes("UTF-8"))
+      val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+      val ans = new GraftSession(spark, llm, GraftConfig(cachePath = Some(path.toString)))
+        .ask(freshDf, question)
+      assert(ans.error.isEmpty, ans.text)
+      assert(ans.text == "5")
+      assert(ans.attempts.map(_.sql) == Seq("SELECT nope FROM df"))
+      assert(llm.callCount == 1, "the stale hit costs one correction call, no generation")
+      assert(llm.lastPrompt.get.startsWith(
+        "Table `df`, with 5 rows and 3 columns. Schema and first rows:\n" +
+          "a (int) | fruits (string) | b (int)\n1 | banana | 5\n2 | banana | 4\n" +
+          "3 | apple | 3\n4 | apple | 2\n5 | banana | 1\n"), llm.lastPrompt.get)
+      // the corrected SQL replaces the stale entry under the same key
+      val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(java.nio.file.Files.readAllBytes(path))
+      assert(tree.get(key).asText() == "SELECT count(*) AS n FROM df")
+    } finally java.nio.file.Files.deleteIfExists(path)
+  }
+
   test("failed asks are not cached") {
     val llm = FakeLlm("```sql\nSELECT nope FROM df\n```")
     val s = new GraftSession(spark, llm, GraftConfig(maxRetries = 0))
@@ -693,6 +742,8 @@ class EngineSpec extends SparkSpec {
       val tree = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readAllBytes(tmp))
       assert(tree.size() == 8, s"expected 8 cached entries, got ${tree.size()}")
+      // every ask logged its duration: none lost to a racing append
+      assert(s.logs.count(_.startsWith("Executed in")) == 8, s.logs.toString)
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
