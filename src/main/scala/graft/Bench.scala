@@ -45,6 +45,20 @@ object Bench {
     (contended, stillSpiked, threshold)
   }
 
+  /** One timed run, or the error it threw: a failed run is never a time. */
+  private[graft] def timed(body: => Any): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(String.valueOf(e).take(200)) }
+  }
+
+  /** The fastest successful run, or the last error when none succeeded —
+    * so a run that breaks fast can never read as a speed-up. */
+  private[graft] def best(runs: Seq[Either[String, Double]]): Either[String, Double] = {
+    val ok = runs.collect { case Right(t) => t }
+    if (ok.nonEmpty) Right(ok.min) else runs.last
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -154,15 +168,13 @@ object Bench {
     // query's own physical plan, all columns included, with zero
     // driver transfer beyond partition counts.
     def minOf2(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double =
-      (1 to 2).map { _ =>
+        : Either[String, Double] =
+      best((1 to 2).map { _ =>
         clearResidue()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+        timed(fn(spark, sfDir).queryExecution.toRdd.count())
+      })
+    val results =
+      scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Double]]
     for ((name, fn) <- runOrder) {
       clearResidue()
       val c = canaryTime()
@@ -196,8 +208,7 @@ object Bench {
         val c = canaryTime()
         canaries += c
         if (c < canaryBefore(name)) canaryBefore(name) = c
-        val t = minOf2(fn)
-        if (t < results(name)) results(name) = t
+        results(name) = best(Seq(results(name), minOf2(fn)))
         healed += 1
       }
     }
@@ -215,17 +226,16 @@ object Bench {
       val c = canaryTime()
       canaries += c
       canaryBefore("ann_codebook_fit") = c
-      results("ann_codebook_fit") = (1 to 2).map { _ =>
+      results("ann_codebook_fit") = best((1 to 2).map { _ =>
         clearResidue()
         ops.Similarity.clearCaches()
-        val t0 = System.nanoTime()
-        try ops.Similarity.prewarmCodebook(spark, sfDir)
-        catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
-      }.min
+        timed(ops.Similarity.prewarmCodebook(spark, sfDir))
+      })
     }
-    val line = renderLine(sfDir, results.toSeq, mainCanaries,
-      canaries.toSeq, canaryBefore.toSeq, healed)
+    val line = renderLine(sfDir,
+      results.toSeq.collect { case (k, Right(t)) => k -> t }, mainCanaries,
+      canaries.toSeq, canaryBefore.toSeq, healed,
+      errors = results.toSeq.collect { case (k, Left(e)) => k -> e })
     // Belt and braces: the full untruncated line also lands in the repo so
     // tools/bench_diff.py can always diff complete per-query maps.
     try java.nio.file.Files.writeString(
@@ -251,11 +261,15 @@ object Bench {
     * ≥ the summary's size preserves a complete, independently-parseable
     * verdict, and the digest lets tools/bench_diff.py authenticate the
     * committed full artifact (BENCH_FULL.json) as THIS run and recover
-    * the complete map from it. */
+    * the complete map from it.
+    *
+    * Rows with no successful run are not in `results`: they go to an
+    * `errors` map (qid → the last run's error) ahead of `canary_before`,
+    * which is absent when every row ran, leaving the line unchanged. */
   private[graft] def renderLine(sfDir: String,
       results: Seq[(String, Double)], mainCanaries: Seq[Double],
       allCanaries: Seq[Double], canaryBefore: Seq[(String, Double)],
-      healed: Int): String = {
+      healed: Int, errors: Seq[(String, String)] = Nil): String = {
     def r3(v: Double): String = f"$v%.3f"
     val qs = results.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
@@ -294,6 +308,12 @@ object Bench {
     val cbJson = canaryBefore.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    val quote = new com.fasterxml.jackson.databind.ObjectMapper()
+    val errJson =
+      if (errors.isEmpty) ""
+      else errors.sortBy(_._1)
+        .map { case (k, e) => "\"" + k + "\":" + quote.writeValueAsString(e) }
+        .mkString("\"errors\":{", ",", "},")
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(qs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     val summaryJson =
@@ -304,7 +324,7 @@ object Bench {
         s""""canary_max":${r3(cMax)},"sf":"$sfDir",""" +
         s""""queries_sha256_16":"$digest","full_path":"BENCH_FULL.json"}"""
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""sf":"$sfDir","load_canary":$canaryJson,""" +
+      s""""sf":"$sfDir","load_canary":$canaryJson,$errJson""" +
       s""""canary_before":$cbJson,"queries":$qs,"summary":$summaryJson}"""
   }
 }

@@ -30,8 +30,7 @@ object Demo {
     val a2 = session.ask(Seq(customer, orders), "Which customer spent the most?")
     println(s"Q: Which customer spent the most?\nA: ${a2.text}\n")
 
-    println(s"telemetry: lastDurationMs=${session.lastDurationMs} " +
-      s"cacheSize=${session.cacheSize} lastSql=${session.lastSqlExecuted}")
+    println(s"telemetry: cacheSize=${session.cacheSize} sql=${a2.sql}")
 
     // chart-question path: aggregated data + a renderable Vega-Lite spec
     import org.apache.spark.sql.functions.{count => cnt, lit}

@@ -5,7 +5,8 @@ import java.time.LocalDate
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftshim.GraftDataset
 
 /** Typed error surface — SURVEY.md §2.1 exceptions mapping
   * (/root/reference/helpers/exceptions.py:8-73). The reference's silent
@@ -56,8 +57,10 @@ final case class GraftConfig(
     chartDir: String = "graft_charts")
 
 /** The answer envelope: rendered text plus the raw result and telemetry.
+  * `sql` is the SQL that ran (on a failed ask, the last SQL it tried);
   * `attempts` is the correction-loop trail — empty when the first
-  * generation succeeded. */
+  * generation succeeded; `promptId` is fresh per ask (the reference's
+  * `last_prompt_id`). */
 final case class Answer(
     text: String,
     df: Option[DataFrame],
@@ -66,17 +69,20 @@ final case class Answer(
     attempts: Seq[Attempt] = Nil,
     /** Path of the Vega-Lite spec captured for this answer — set only when
       * config.saveCharts is on and the ask was chart-shaped. */
-    chartPath: Option[String] = None)
+    chartPath: Option[String] = None,
+    promptId: String)
 
 /** The conversational engine — SURVEY.md §2.1 `run`/`run_code` mapping:
   * the reference's cache → head/shape → prompt → codegen → sanitize →
   * execute → retry → answer loop (/root/reference/polarsai/__init__.py:
   * 214-341,490-582) rebuilt Spark-natively with SQL as the codegen target.
   *
-  * Execution is `spark.sql` over read-only temp views `df` / `df1..dfN`
-  * (the reference's exec-environment binding, :530-537), so Catalyst
-  * analyzes, optimizes, and distributes the generated query — the stage
-  * where the reference runs single-machine eager Polars kernels.
+  * Execution runs the very plan the guard checked: each ask's frames are
+  * bound as `df` / `df1..dfN` into that plan (the reference's per-call
+  * exec namespace, :530-537), never into the session catalog, so
+  * concurrent asks cannot see each other's frames. Catalyst analyzes,
+  * optimizes, and distributes the generated query — the stage where the
+  * reference runs single-machine eager Polars kernels.
   */
 final class GraftSession(
     val spark: SparkSession,
@@ -113,8 +119,7 @@ final class GraftSession(
     * (polarsai/__init__.py:214-236): a lightweight session view with the
     * modified config that SHARES this session's SQL cache (and its
     * write-through file), so overriding rendering/retry behavior never
-    * re-generates SQL already paid for. Telemetry fields (lastPromptId,
-    * logs…) are per-view.
+    * re-generates SQL already paid for. `logs` are per-view.
     *
     *   session.withConfig(_.copy(conversational = true)).ask(df, q)
     *   session.withConfig(_.copy(maxRetries = 0)).ask(df, q)  // no correction loop
@@ -142,18 +147,9 @@ final class GraftSession(
   }
 
   // telemetry mirroring the reference's fields (polarsai/__init__.py:73-76,
-  // 594-606): a stable id per engine instance, a fresh id per ask
+  // 594-606): a stable id per engine instance; the per-ask id, SQL and
+  // trail ride on each Answer
   val processId: String = java.util.UUID.randomUUID().toString
-  @volatile var lastPromptId: Option[String] = None
-  @volatile var lastPrompt: Option[String] = None
-  @volatile var lastSqlGenerated: Option[String] = None
-  @volatile var lastSqlExecuted: Option[String] = None
-  @volatile var lastError: Option[String] = None
-  @volatile var lastDurationMs: Long = 0L
-  /** Per-try (sql, error) trail of the most recent ask's correction loop
-    * (reference `_logs` / `last_error` parity); also attached to the
-    * returned Answer. */
-  @volatile var lastAttempts: Seq[Attempt] = Nil
   /** Appended under its own lock: concurrent asks on one session all log
     * here. Readers racing a live ask should lock it too. */
   val logs: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
@@ -180,23 +176,23 @@ final class GraftSession(
     * ergonomic superset of the reference's positional df1..dfN binding. */
   def askNamed(tables0: Seq[(String, DataFrame)], question: String): Answer = {
     val t0 = System.nanoTime()
-    lastPromptId = Some(java.util.UUID.randomUUID().toString)
-    lastAttempts = Nil
+    val promptId = java.util.UUID.randomUUID().toString
+    val attempts = mutable.ArrayBuffer.empty[Attempt]
+    def failed(err: GraftError) = Answer(envelope(err.message), None,
+      attempts.lastOption.map(_.sql), Some(err), attempts.toList, promptId = promptId)
     try {
-      tables0.foreach { case (n, df) => df.createOrReplaceTempView(n) }
       // A description costs a row count and a head collect per table, and
       // only prompts read it: a cache hit whose SQL runs clean builds none.
       lazy val tables = tables0.map { case (n, df) =>
         Prompts.describe(n, df, anonymize = config.anonymizeHead,
           exactRowCount = config.exactRowCount) }
-      val names = tables0.map(_._1)
 
       val key = cacheKey(question, tables0)
       val cached = if (config.enableCache) cache.get(key) else None
       val sql0 = cached.getOrElse(generate(question, tables))
       if (config.showSql) println(sql0)
 
-      run(question, sql0, tables, names.toSet) match {
+      run(question, sql0, tables, tables0, attempts) match {
         case Right((df, executedSql, head)) =>
           // Cache the SQL that actually executed — a first generation that
           // needed the correction loop must not replay its bad draft on the
@@ -205,29 +201,19 @@ final class GraftSession(
             cache(key) = executedSql
             persistCache()
           }
-          render(question, df, executedSql, head)
+          Answer(render(question, df, head), Some(df), Some(executedSql), None,
+            attempts.toList, promptId = promptId)
         case Left(err) =>
           if (config.enableCache && cache.remove(key).isDefined) persistCache()
-          lastError = Some(err.message)
-          Answer(envelope(err.message), None, lastSqlExecuted, Some(err),
-            lastAttempts)
+          failed(err)
       }
     } catch {
       // a response with no extractable fence/SQL is its own failure mode
       // (reference NoCodeFoundError, helpers/exceptions.py) — surface the
       // typed error, not a generic BadSql
-      case e: GraftSession.NoSqlInResponse =>
-        lastError = Some(e.getMessage)
-        Answer(envelope(e.getMessage), None, lastSqlExecuted,
-          Some(NoSqlFound(e.getMessage)), lastAttempts)
-      case e: Exception =>
-        lastError = Some(e.getMessage)
-        Answer(envelope(e.getMessage), None, lastSqlExecuted,
-          Some(BadSql(String.valueOf(e.getMessage))), lastAttempts)
-    } finally {
-      lastDurationMs = (System.nanoTime() - t0) / 1000000
-      log(s"Executed in: ${lastDurationMs}ms")
-    }
+      case e: GraftSession.NoSqlInResponse => failed(NoSqlFound(e.getMessage))
+      case e: Exception => failed(BadSql(String.valueOf(e.getMessage)))
+    } finally log(s"Executed in: ${(System.nanoTime() - t0) / 1000000}ms")
   }
 
   /** prompt → LLM → fence extraction (parse gate happens in run()). */
@@ -235,11 +221,9 @@ final class GraftSession(
     val prompt = config.customPrompts.get(Prompts.GenerateSqlKey)
       .map(f => f(question, tables))
       .getOrElse(Prompts.generateSql(question, tables, LocalDate.now()))
-    lastPrompt = Some(prompt)
     val sql = SqlExtractor.extract(llm.predict(prompt))
     if (sql.isEmpty)
       throw new GraftSession.NoSqlInResponse("No SQL found in LLM response")
-    lastSqlGenerated = Some(sql)
     sql
   }
 
@@ -251,42 +235,39 @@ final class GraftSession(
     * errors) feed the correction prompt like the reference's run_code does,
     * instead of first surfacing at render and bypassing the retries.
     * Returns the frame, the SQL that actually succeeded, and the collected
-    * preview rows (so render doesn't re-execute). */
+    * preview rows (so render doesn't re-execute); every failed try lands
+    * on `attempts`. */
   private def run(question: String, firstSql: String,
-      tables: => Seq[Prompts.TableCtx],
-      views: Set[String]): Either[GraftError, (DataFrame, String, Array[org.apache.spark.sql.Row])] = {
-    var sql = firstSql
-    var lastErr = ""
-    for (attempt <- 0 to config.maxRetries) {
-      SqlGuard.check(spark, sql, views, config.functionAllowlist) match {
-        case SqlGuard.Rejected(reason) => lastErr = reason
-        case SqlGuard.Ok =>
-          try {
-            lastSqlExecuted = Some(sql)
-            val out = spark.sql(sql)
-            out.schema // force analysis so AnalysisException surfaces here
-            val head = out.limit(21).collect() // surface runtime errors here too
-            return Right((out, sql, head))
-          } catch { case e: Exception => lastErr = String.valueOf(e.getMessage) }
+      tables: => Seq[Prompts.TableCtx], frames: Seq[(String, DataFrame)],
+      attempts: mutable.Buffer[Attempt]): Either[GraftError, (DataFrame, String, Array[Row])] = {
+    def loop(sql: String, attempt: Int): Either[GraftError, (DataFrame, String, Array[Row])] =
+      guarded(sql, frames).flatMap(out => caught(out.limit(21).collect()).map((out, sql, _))) match {
+        case Right(done) => Right(done)
+        case Left(err) =>
+          attempts += Attempt(sql, err)
+          log(s"attempt ${attempt + 1} failed: $err")
+          if (attempt >= config.maxRetries) Left(RetriesExhausted(err))
+          else loop(SqlExtractor.extract(llm.predict(
+            Prompts.correctError(question, sql, err, tables))), attempt + 1)
       }
-      lastAttempts = lastAttempts :+ Attempt(sql, lastErr)
-      log(s"attempt ${attempt + 1} failed: $lastErr")
-      if (attempt < config.maxRetries) {
-        val prompt = Prompts.correctError(question, sql, lastErr, tables)
-        lastPrompt = Some(prompt)
-        sql = SqlExtractor.extract(llm.predict(prompt))
-        lastSqlGenerated = Some(sql)
-      }
-    }
-    Left(RetriesExhausted(lastErr))
+    loop(firstSql, 0)
   }
+
+  /** Guard → bind → analyze: parse `sql` once, validate the unbound plan,
+    * bind the frames into it (no catalog views) and analyze it. Left is the
+    * guard's reason or the analysis error. */
+  private def guarded(sql: String, frames: Seq[(String, DataFrame)]): Either[String, DataFrame] =
+    SqlGuard.accept(spark, sql, frames.map(_._1).toSet, config.functionAllowlist)
+      .flatMap(plan => caught(GraftDataset.ofRows(spark, SqlGuard.bind(plan, frames))))
+
+  private def caught[A](body: => A): Either[String, A] =
+    try Right(body) catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
 
   /** Result extraction (reference :556-582): a 1×1 frame renders as the
     * scalar; otherwise a bounded tabular preview. Optionally rephrased by a
     * second LLM call (conversational_answer, :197-212 — broken in the
     * reference, SURVEY §7.5.3; intended semantics restored here). */
-  private def render(question: String, df: DataFrame, sql: String,
-      head: Array[org.apache.spark.sql.Row]): Answer = {
+  private def render(question: String, df: DataFrame, head: Array[Row]): String = {
     val cols = df.columns
     val text =
       if (head.length == 1 && cols.length == 1) String.valueOf(head(0).get(0))
@@ -295,11 +276,8 @@ final class GraftSession(
         val more = if (head.length > 20) "\n…" else ""
         (cols.mkString("\t") +: shown).mkString("\n") + more
       }
-    val finalText =
-      if (config.conversational)
-        llm.predict(Prompts.generateResponse(question, text))
-      else text
-    Answer(finalText, Some(df), Some(sql), None, lastAttempts)
+    if (config.conversational) llm.predict(Prompts.generateResponse(question, text))
+    else text
   }
 
   /** Reference's exact error envelope (polarsai/__init__.py:334-341). */
@@ -353,7 +331,7 @@ final class GraftSession(
           color = colorField)
         val dir = java.nio.file.Paths.get(config.chartDir)
         java.nio.file.Files.createDirectories(dir)
-        val path = dir.resolve(s"${lastPromptId.getOrElse(processId)}.json")
+        val path = dir.resolve(s"${a.promptId}.json")
         java.nio.file.Files.write(path, spec.getBytes("UTF-8"))
         log(s"Chart saved to: $path")
         a.copy(chartPath = Some(path.toString))
@@ -367,19 +345,8 @@ final class GraftSession(
   /** Guarded SQL passthrough: run caller-supplied SQL through the same
     * SqlGuard sandbox as LLM-generated SQL, against the given tables. For
     * callers who want the safety rails without the LLM round-trip. */
-  def runSql(tables: Seq[(String, DataFrame)], sql: String): Either[GraftError, DataFrame] = {
-    tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    SqlGuard.check(spark, sql, tables.map(_._1).toSet, config.functionAllowlist) match {
-      case SqlGuard.Rejected(reason) => Left(BadSql(reason))
-      case SqlGuard.Ok =>
-        try {
-          val out = spark.sql(sql)
-          out.schema
-          lastSqlExecuted = Some(sql)
-          Right(out)
-        } catch { case e: Exception => Left(BadSql(String.valueOf(e.getMessage))) }
-    }
-  }
+  def runSql(tables: Seq[(String, DataFrame)], sql: String): Either[GraftError, DataFrame] =
+    guarded(sql, tables).left.map(BadSql(_))
 }
 
 object GraftSession {

@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedGenerator, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, WithWindowDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, SubqueryAlias, UnresolvedWith, WithWindowDefinition}
 
 /** Pre-execution SQL validation — SURVEY.md §2.1 `_clean_code` /
   * `_check_imports` mapping (/root/reference/polarsai/__init__.py:403-430,
@@ -215,23 +216,6 @@ object SqlGuard {
         Left("parser stack overflow: query too deeply nested")
     }
 
-  private def isWith(p: LogicalPlan): Boolean =
-    p.nodeName == "UnresolvedWith" || p.nodeName == "With"
-
-  /** CTE definitions of an UnresolvedWith node: Seq of (name, plan, …)
-    * tuples (a Tuple3 in Spark 4.1 — matched structurally so minor parser
-    * changes don't silently disable the check). */
-  private def cteDefs(w: LogicalPlan): Seq[(String, LogicalPlan)] =
-    w.productIterator.collectFirst {
-      case rs: Seq[_] => rs.collect {
-        case t: Product if t.productArity >= 2 &&
-          t.productElement(0).isInstanceOf[String] &&
-          t.productElement(1).isInstanceOf[LogicalPlan] =>
-          (t.productElement(0).asInstanceOf[String],
-            t.productElement(1).asInstanceOf[LogicalPlan])
-      }
-    }.getOrElse(Nil)
-
   /** Validate a parsed plan against the registered view names.
     *
     * The walk is SCOPE-AWARE on CTE names (r9 review finding): a name
@@ -379,17 +363,17 @@ object SqlGuard {
       // Children: a WITH extends the scope — each definition body sees
       // the outer scope plus the definitions before it, the main query
       // sees them all. Everything else inherits the scope unchanged.
-      if (isWith(p)) {
-        val defs = cteDefs(p)
-        var seen = scope
-        for ((n, body) <- defs) {
-          for (rej <- walk(body, seen)) return Some(rej)
-          seen = seen + n.toLowerCase
-        }
-        for (c <- p.children; rej <- walk(c, seen)) return Some(rej)
-      } else {
-        for (c <- p.children; rej <- walk(c, scope)) return Some(rej)
+      val childScope = p match {
+        case w: UnresolvedWith =>
+          var seen = scope
+          for ((n, body, _) <- w.cteRelations) {
+            for (rej <- walk(body, seen)) return Some(rej)
+            seen += n.toLowerCase
+          }
+          seen
+        case _ => scope
       }
+      for (c <- p.children; rej <- walk(c, childScope)) return Some(rej)
       None
     }
 
@@ -404,10 +388,52 @@ object SqlGuard {
     }
   }
 
+  /** Bind each relation that names a frame to that frame's analyzed plan,
+    * under the scoping [[validate]] applies: a CTE of the same name shadows
+    * the frame inside its scope (a definition body sees the definitions
+    * before it, and itself too under WITH RECURSIVE), and the walk reaches
+    * every place validate does — children, subquery expressions, named
+    * WINDOW specs and CTE bodies. Bind only a plan validate accepted: the
+    * frame plans hold nodes outside the allowlist. */
+  def bind(plan: LogicalPlan, frames: Seq[(String, DataFrame)]): LogicalPlan = {
+    val byName = frames.map { case (n, df) => n.toLowerCase -> (n, df) }.toMap
+    def go(p: LogicalPlan, ctes: Set[String]): LogicalPlan = {
+      def sub(e: Expression): Expression =
+        e.transform { case s: SubqueryExpression => s.withNewPlan(go(s.plan, ctes)) }
+      p match {
+        case r: UnresolvedRelation =>
+          val n = r.multipartIdentifier.mkString(".").toLowerCase
+          byName.get(n).filterNot(_ => ctes(n))
+            .map { case (name, df) => SubqueryAlias(name, df.queryExecution.analyzed) }
+            .getOrElse(r)
+        case w: UnresolvedWith =>
+          var seen = ctes
+          val defs = w.cteRelations.map { case (n, body, depth) =>
+            val inBody = if (w.allowRecursion) seen + n.toLowerCase else seen
+            seen += n.toLowerCase
+            (n, go(body, inBody).asInstanceOf[SubqueryAlias], depth)
+          }
+          w.copy(child = go(w.child, seen), cteRelations = defs)
+        case w: WithWindowDefinition =>
+          w.copy(child = go(w.child, ctes), windowDefinitions =
+            w.windowDefinitions.map { case (k, v) => k -> sub(v).asInstanceOf[WindowSpecDefinition] })
+        case _ => p.mapChildren(go(_, ctes)).mapExpressions(sub)
+      }
+    }
+    go(plan, Set.empty)
+  }
+
+  /** The parsed plan if it passes [[validate]] — still unbound — or why not. */
+  def accept(spark: SparkSession, sql: String, allowedViews: Set[String],
+      functionAllowlist: Option[Set[String]] = None): Either[String, LogicalPlan] =
+    parse(spark, sql).left.map(err => s"parse error: $err").flatMap { plan =>
+      validate(plan, allowedViews, functionAllowlist) match {
+        case Ok => Right(plan)
+        case Rejected(reason) => Left(reason)
+      }
+    }
+
   def check(spark: SparkSession, sql: String, allowedViews: Set[String],
       functionAllowlist: Option[Set[String]] = None): Verdict =
-    parse(spark, sql) match {
-      case Left(err) => Rejected(s"parse error: $err")
-      case Right(plan) => validate(plan, allowedViews, functionAllowlist)
-    }
+    accept(spark, sql, allowedViews, functionAllowlist).fold(Rejected(_), _ => Ok)
 }

@@ -122,4 +122,53 @@ class BenchVerdictSpec extends AnyFunSuite {
       .digest(qs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     assert(got == want)
   }
+
+  // ---- failed runs: never a time (a query that breaks fast must not read
+  // as a speed-up)
+
+  test("a run that throws is an error, not a time; the min is taken over " +
+      "successful runs only") {
+    val boom = Bench.timed(throw new IllegalStateException("boom"))
+    assert(boom.left.exists(_.contains("boom")))
+    val ok = Bench.timed(Thread.sleep(20))
+    assert(ok.exists(_ >= 0.02))
+    assert(Bench.best(Seq(boom, ok)) == ok, "a fast failure never wins the min")
+    assert(Bench.best(Seq(Right(2.0), Right(1.0))) == Right(1.0))
+    assert(Bench.best(Seq(boom, Left("later"))) == Left("later"),
+      "with no successful run the row is the last error")
+  }
+
+  /** Two clean rows; `cleanLine` pins a clean run's line byte for byte. */
+  private def smallLine(results: Seq[(String, Double)],
+      errors: Seq[(String, String)]): String =
+    Bench.renderLine("sf", results, Seq(0.2, 0.3), Seq(0.2, 0.3, 0.25),
+      Seq("q_a" -> 0.2, "q_b" -> 0.3), healed = 1, errors = errors)
+
+  private val cleanLine =
+    """{"metric":"total","value":3.500,"unit":"sec","sf":"sf",""" +
+      """"load_canary":{"workload":"q_group_agg","min":0.200,"median":0.300,""" +
+      """"max":0.300,"contended":0,"spiked_samples":0,"healed":1,""" +
+      """"spike_threshold":0.600,"series":[0.200,0.300,0.250]},""" +
+      """"canary_before":{"q_a":0.200,"q_b":0.300},""" +
+      """"queries":{"q_a":1.000,"q_b":2.500},""" +
+      """"summary":{"total":3.500,"rows":2,"contended":0,"spiked_samples":0,""" +
+      """"healed":1,"spike_threshold":0.600,"canary_min":0.200,""" +
+      """"canary_median":0.300,"canary_max":0.300,"sf":"sf",""" +
+      """"queries_sha256_16":"159c9a1119a42c81","full_path":"BENCH_FULL.json"}}"""
+
+  test("when every run succeeds the line is byte-identical: no errors map") {
+    assert(smallLine(Seq("q_a" -> 1.0, "q_b" -> 2.5), Nil) == cleanLine)
+  }
+
+  test("a row with no successful run sits in an errors map ahead of " +
+      "canary_before, and is left out of queries and total") {
+    val line = smallLine(Seq("q_a" -> 1.0), Seq("q_b" -> "java.lang.RuntimeException: \"x\""))
+    val root = mapper.readTree(line)
+    assert(root.get("errors").get("q_b").asText() == "java.lang.RuntimeException: \"x\"")
+    assert(line.indexOf("\"errors\":") < line.indexOf("\"canary_before\":"))
+    assert(root.get("queries").size() == 1 && !root.get("queries").has("q_b"))
+    assert(root.get("value").asDouble() == 1.0)
+    assert(root.get("summary").get("total").asDouble() == 1.0)
+    assert(root.get("summary").get("rows").asInt() == 1)
+  }
 }

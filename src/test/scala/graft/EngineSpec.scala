@@ -22,10 +22,9 @@ class EngineSpec extends SparkSpec {
     assert(llm.lastPrompt.get.contains("Table `df`"))
     // telemetry id parity (reference process_id / last_prompt_id)
     assert(s.processId.nonEmpty)
-    val firstId = s.lastPromptId
-    assert(firstId.isDefined)
-    s.ask(freshDf, "and the B column?")
-    assert(s.lastPromptId != firstId, "each ask gets a fresh prompt id")
+    assert(ans.promptId.nonEmpty)
+    assert(s.ask(freshDf, "and the B column?").promptId != ans.promptId,
+      "each ask gets a fresh prompt id")
   }
 
   test("tabular answer renders header + rows") {
@@ -77,7 +76,9 @@ class EngineSpec extends SparkSpec {
     assert(ans.attempts.forall(_.error.nonEmpty))
     assert(ans.attempts(0).error != ans.attempts(1).error,
       "guard rejection and engine error must be distinguishable")
-    assert(s.lastAttempts == ans.attempts, "session telemetry mirrors the Answer")
+    assert(s.logs.filter(_.startsWith("attempt")) == ans.attempts.zipWithIndex.map {
+      case (a, i) => s"attempt ${i + 1} failed: ${a.error}" },
+      "session telemetry mirrors the Answer")
     // a later clean ask resets the trail
     val ans2 = s.ask(freshDf, "count again differently?")
     assert(ans2.error.isEmpty && ans2.attempts.isEmpty)
@@ -510,7 +511,7 @@ class EngineSpec extends SparkSpec {
       val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
       assert(files.length == 1, s"expected exactly one spec file: ${files.toSeq}")
       assert(ans.chartPath.contains(files(0)))
-      assert(files(0).endsWith(s"${s.lastPromptId.get}.json"))
+      assert(files(0).endsWith(s"${ans.promptId}.json"))
       val tree = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(files(0))))
       assert(tree.path("mark").asText() == "bar")
@@ -745,6 +746,90 @@ class EngineSpec extends SparkSpec {
       // every ask logged its duration: none lost to a racing append
       assert(s.logs.count(_.startsWith("Executed in")) == 8, s.logs.toString)
     } finally java.nio.file.Files.deleteIfExists(tmp)
+  }
+
+  test("concurrent asks each read their own frame, on one shared session " +
+      "and on one session per thread") {
+    // Every ask binds its own one-row frame as `df`: a binding in the shared
+    // session catalog lets a racing ask answer from another thread's frame.
+    val llm = FakeLlm("```sql\nSELECT v FROM df\n```")
+    val shared = new GraftSession(spark, llm)
+    for ((shape, sessionOf) <- Seq[(String, () => GraftSession)](
+        "one shared session" -> (() => shared),
+        "one session per thread" -> (() => new GraftSession(spark, llm)))) {
+      val frames = (0 until 8).map(t => (0 until 10).map(i => Seq(t * 100L + i).toDF("v")))
+      val answers = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Answer)]()
+      val threads = frames.zipWithIndex.map { case (dfs, t) =>
+        val s = sessionOf()
+        new Thread(() => dfs.zipWithIndex.foreach { case (df, i) =>
+          answers.add((t * 100L + i, s.ask(df, "what is v?"))) })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      val all = answers.toArray(Array.empty[(Long, Answer)]).toSeq
+      assert(all.size == 80, shape)
+      val wrong = all.collect { case (v, a) if a.error.nonEmpty || a.text != v.toString => (v, a.text) }
+      assert(wrong.size == 0, s"$shape: ${wrong.size} of 80 wrong, e.g. ${wrong.take(3)}")
+      assert(all.map(_._2.promptId).distinct.size == 80, shape)
+    }
+  }
+
+  test("frames bind into the checked plan under SQL name scoping, through " +
+      "ask and runSql, leaving the session catalog untouched") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{avg, row_number, sum}
+    val df = freshDf
+    val other = Seq((1, "x"), (3, "y"), (9, "z")).toDF("a", "tag")
+    def scalar(d: DataFrame): String = String.valueOf(d.head().get(0))
+    val avgA = df.agg(avg("a")).head().getDouble(0)
+    // (case, frames, SQL, DataFrame-API value)
+    val cases = Seq[(String, Seq[(String, DataFrame)], String, String)](
+      ("a CTE named df shadows the frame", Seq("df" -> df),
+        "WITH df AS (SELECT 42 AS a) SELECT a FROM df", "42"),
+      ("a CTE body reads the outer df", Seq("df" -> df),
+        "WITH df AS (SELECT a * 10 AS a FROM df) SELECT sum(a) FROM df",
+        scalar(df.agg(sum($"a" * 10)))),
+      ("aliased self-join", Seq("df" -> df),
+        "SELECT count(*) FROM df x JOIN df y ON x.fruits = y.fruits",
+        df.as("x").join(df.as("y"), $"x.fruits" === $"y.fruits").count().toString),
+      ("LATERAL", Seq("df" -> df),
+        "SELECT sum(t.n) FROM df, LATERAL (SELECT count(*) AS n FROM df d2 " +
+          "WHERE d2.a <= df.a) t",
+        df.as("l").join(df.as("r"), $"r.a" <= $"l.a").count().toString),
+      ("EXISTS", Seq("df" -> df),
+        "SELECT count(*) FROM df WHERE EXISTS (SELECT 1 FROM df d2 WHERE d2.b = df.a + 2)",
+        df.as("l").join(df.as("r"), $"r.b" === $"l.a" + 2, "left_semi").count().toString),
+      ("a subquery in a named WINDOW", Seq("df" -> df),
+        "SELECT sum(r) FROM (SELECT row_number() OVER w AS r FROM df " +
+          "WINDOW w AS (PARTITION BY a > (SELECT avg(a) FROM df) ORDER BY a)) z",
+        scalar(df.select(row_number().over(Window.partitionBy($"a" > avgA).orderBy("a"))
+          .as("r")).agg(sum("r")))),
+      ("upper-case DF", Seq("df" -> df), "SELECT sum(a) FROM DF", scalar(df.agg(sum("a")))),
+      ("a two-frame join", Seq("df1" -> df, "df2" -> other),
+        "SELECT count(*) FROM df1 JOIN df2 ON df1.a = df2.a",
+        df.join(other, "a").count().toString),
+      ("WITH RECURSIVE df refers to itself", Seq("df" -> df),
+        "WITH RECURSIVE df AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM df " +
+          "WHERE n < 3) SELECT sum(n) FROM df",
+        scalar(spark.range(1, 4).agg(sum("id")))))
+    // A caller's own view named df: a relation left unbound would read it.
+    val decoy = Seq((100, "decoy", 100)).toDF("a", "fruits", "b")
+    decoy.createOrReplaceTempView("df")
+    Seq("df1", "df2").foreach(spark.catalog.dropTempView)
+    try {
+      val views = spark.catalog.listTables().collect().map(_.name).toSet
+      for ((name, frames, sql, want) <- cases) {
+        val ans = new GraftSession(spark, FakeLlm(s"```sql\n$sql\n```"),
+          GraftConfig(maxRetries = 0)).askNamed(frames, name)
+        assert(ans.error.isEmpty && ans.text == want, s"ask, $name: ${ans.text}")
+        val direct = new GraftSession(spark, FakeLlm("unused")).runSql(frames, sql)
+        assert(direct.map(scalar) == Right(want), s"runSql, $name: $direct")
+      }
+      assert(spark.table("df").collect().toSeq == decoy.collect().toSeq,
+        "the caller's view named df is unchanged")
+      assert(spark.catalog.listTables().collect().map(_.name).toSet == views,
+        "no ask leaves a view in the session catalog")
+    } finally spark.catalog.dropTempView("df")
   }
 
   test("withConfig: per-call overrides share the parent's SQL cache") {
