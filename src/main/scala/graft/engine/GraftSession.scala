@@ -38,8 +38,9 @@ final case class GraftConfig(
     maxRetries: Int = 3,
     showSql: Boolean = false,
     anonymizeHead: Boolean = false,
-    // exact df.count() per table per uncached ask (reference shape parity;
-    // flip off at large scale to use free optimizer stats / "unknown")
+    // exact df.count() per frame described (reference shape parity; a
+    // frame is described once per session until clearCache — flip off at
+    // large scale to use free optimizer stats / "unknown")
     exactRowCount: Boolean = true,
     // generated SQL may ONLY call these functions — DEFAULT ON with the
     // curated deterministic analytics surface, matching the reference's
@@ -113,13 +114,40 @@ final class GraftSession(
     }
   }
 
+  /** Table descriptions, memoized per frame object: a conversation pays a
+    * frame's row count and head collect once, and a frame bound under two
+    * names (`df1`, `df2`) is described once. Keyed on the frame's identity
+    * (`Dataset` overrides neither `equals` nor `hashCode`).
+    *
+    * Freshness: a frame's plan is fixed, and a file-backed frame keeps the
+    * file listing Spark took when the frame was built, so the same object
+    * scans the same files; a new frame object gets a new entry. Weak keys
+    * bound the memo by the frames the caller still holds. `clearCache()`
+    * is the invalidation hook (e.g. after files are rewritten in place).
+    * Only prompt text is reused: every ask still runs its own result query.
+    * Each withConfig view keeps its own memo, since `anonymizeHead` and
+    * `exactRowCount` shape the description. */
+  private val described = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Prompts.TableCtx]())
+
+  /** `df` described under `name`: from the memo, or built outside its lock
+    * and stored. */
+  private def describe(name: String, df: DataFrame): Prompts.TableCtx =
+    Option(described.get(df)).getOrElse {
+      val ctx = Prompts.describe(name, df, anonymize = config.anonymizeHead,
+        exactRowCount = config.exactRowCount)
+      described.put(df, ctx)
+      ctx
+    }.copy(name = name)
+
   /** Per-call config override, the reference's run(...,
     * is_conversational_answer=, show_code=, anonymize_df=,
     * use_error_correction_framework=) parameter surface
     * (polarsai/__init__.py:214-236): a lightweight session view with the
     * modified config that SHARES this session's SQL cache (and its
     * write-through file), so overriding rendering/retry behavior never
-    * re-generates SQL already paid for. `logs` are per-view.
+    * re-generates SQL already paid for. `logs` and table descriptions are
+    * per-view.
     *
     *   session.withConfig(_.copy(conversational = true)).ask(df, q)
     *   session.withConfig(_.copy(maxRetries = 0)).ask(df, q)  // no correction loop
@@ -181,11 +209,10 @@ final class GraftSession(
     def failed(err: GraftError) = Answer(envelope(err.message), None,
       attempts.lastOption.map(_.sql), Some(err), attempts.toList, promptId = promptId)
     try {
-      // A description costs a row count and a head collect per table, and
-      // only prompts read it: a cache hit whose SQL runs clean builds none.
-      lazy val tables = tables0.map { case (n, df) =>
-        Prompts.describe(n, df, anonymize = config.anonymizeHead,
-          exactRowCount = config.exactRowCount) }
+      // A description costs a row count and a head collect per frame, and
+      // only prompts read it: a cache hit whose SQL runs clean builds none,
+      // and a frame already described in this session is not described again.
+      lazy val tables = tables0.map { case (n, df) => describe(n, df) }
 
       val key = cacheKey(question, tables0)
       val cached = if (config.enableCache) cache.get(key) else None
@@ -297,7 +324,10 @@ final class GraftSession(
       .map("%02x".format(_)).mkString
   }
 
-  def clearCache(): Unit = { cache.clear(); persistCache() }
+  /** Empties the answer cache (shared with withConfig views, and its
+    * cachePath file) and this session's table descriptions, so the next
+    * prompt re-counts and re-reads every frame. */
+  def clearCache(): Unit = { cache.clear(); described.clear(); persistCache() }
   def cacheSize: Int = cache.size
 
   /** Chart-aware ask: the normal ask-loop plus, when config.saveCharts is

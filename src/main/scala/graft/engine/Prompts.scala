@@ -40,7 +40,11 @@ object Prompts {
     * dead (SURVEY §7.5.5 — the upstream privacy feature was dropped in the
     * port). Implemented here for real: cell values are replaced by
     * deterministic type-shaped placeholders, so the model still sees shape
-    * and dtypes but no data leaves the cluster in prompts. */
+    * and dtypes but no data leaves the cluster in prompts.
+    *
+    * Runs the exact count (if asked for) and the head collect as Spark
+    * jobs; GraftSession calls it once per frame object per session and
+    * reuses the result. */
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
     val header = schemaHeader(df)

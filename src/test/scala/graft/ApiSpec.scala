@@ -441,4 +441,17 @@ class ApiSpec extends SparkSpec {
     assert(ops.Similarity.prewarmCodebook(spark, sf) == k)
     ops.Similarity.clearCaches()
   }
+
+  test("itemSims fails loudly on a packed pair key outside [0, 2^31)") {
+    def sims(key: Long) = ops.Graph.itemSims(
+      Seq((1L, 10L), (1L, key), (2L, 10L), (2L, key)).toDF("c", "sk")).collect()
+    assert(sims(Int.MaxValue.toLong).length == 2, "the largest packable key is fine")
+    for (bad <- Seq(1L << 31, -1L)) {
+      val err = intercept[Exception](sims(bad))
+      val messages = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toList
+      assert(messages.exists(_.contains("packed pair key outside [0, 2^31)")),
+        s"key $bad: $messages")
+    }
+  }
 }

@@ -368,6 +368,53 @@ class EngineSpec extends SparkSpec {
     assert(cold == 15, "a cold ask scans for the count, the head and the result")
   }
 
+  test("a frame object is described once per session, until clearCache") {
+    val scanned = spark.sparkContext.longAccumulator("described")
+    val seen = org.apache.spark.sql.functions.udf { (a: Long) => scanned.add(1); true }
+    def frame = spark.range(1, 6, 1, 1).toDF("a").filter(seen($"a"))
+    val df = frame
+    def delta(s: GraftSession, dfs: Seq[org.apache.spark.sql.DataFrame], q: String): Long = {
+      val before = scanned.value
+      val ans = s.ask(dfs, q)
+      assert(ans.error.isEmpty && ans.text == "5", ans.text)
+      scanned.value - before
+    }
+    def tableBlock(prompt: String): String =
+      prompt.substring(prompt.indexOf("Table `"), prompt.indexOf("\n\nWhen asked"))
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm)
+    assert(delta(s, Seq(df), "how many rows?") == 15, "count + head + result")
+    val first = tableBlock(llm.lastPrompt.get)
+    assert(first.contains("with 5 rows"), first)
+    assert(delta(s, Seq(df), "and how many rows now?") == 5,
+      "a second cold question on the same frame scans for its result only")
+    assert(llm.callCount == 2, "both questions were cold")
+    assert(tableBlock(llm.lastPrompt.get) == first)
+    s.clearCache()
+    assert(delta(s, Seq(df), "how many rows, once more?") == 15,
+      "clearCache drops the descriptions")
+    assert(delta(s, Seq(frame), "how many rows in the new frame?") == 15,
+      "a new frame object with the same rows is described afresh")
+
+    // one frame bound under two names is described once
+    val two = FakeLlm("```sql\nSELECT count(*) AS n FROM df1\n```")
+    assert(delta(new GraftSession(spark, two), Seq(df, df), "rows in df1?") == 15)
+    assert(two.lastPrompt.get.contains("Table `df1`") &&
+      two.lastPrompt.get.contains("Table `df2`"), two.lastPrompt.get)
+
+    // a withConfig view keeps its own memo: anonymizeHead applies even to a
+    // frame the parent has already described with real values
+    val fruit = freshDf
+    s.ask(fruit, "how many fruit rows?")
+    assert(llm.lastPrompt.get.contains("banana"))
+    s.withConfig(_.copy(anonymizeHead = true)).ask(fruit, "how many fruits?")
+    val masked = llm.lastPrompt.get
+    assert(masked.contains("str_0") && !masked.contains("banana") &&
+      !masked.contains("apple"), masked)
+    s.ask(fruit, "how many fruit rows, again?")
+    assert(llm.lastPrompt.get.contains("banana"), "the parent's memo is its own")
+  }
+
   test("cache key format on disk is unchanged; a failing cached SQL " +
       "builds the full table block for its correction") {
     val path = java.nio.file.Files.createTempFile("graft_cache_key", ".json")
