@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query at SPARK_GRAFT_SF_DIR,
   * one JSON line (driver contract). A small warmup pass JITs the common
   * scan/agg/join/window code paths first so measured numbers are
@@ -45,76 +43,10 @@ object Bench {
     (contended, stillSpiked, threshold)
   }
 
-  /** One timed run, or the error it threw: a failed run is never a time. */
-  private[graft] def timed(body: => Any): Either[String, Double] = {
-    val t0 = System.nanoTime()
-    try { body; Right((System.nanoTime() - t0) / 1e9) }
-    catch { case e: Throwable => Left(String.valueOf(e).take(200)) }
-  }
-
-  /** The fastest successful run, or the last error when none succeeded —
-    * so a run that breaks fast can never read as a speed-up. */
-  private[graft] def best(runs: Seq[Either[String, Double]]): Either[String, Double] = {
-    val ok = runs.collect { case Right(t) => t }
-    if (ok.nonEmpty) Right(ok.min) else runs.last
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanosAsLong is enabled on demand by Tables.eventsRaw, only when
-      // events.ts is actually TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen cache thrashes under a 200+-query
-      // suite: every timed run re-pays Janino compilation and C2 warmup
-      // of brand-new classes, whose cost depends on JVM-global JIT/code-
-      // cache state — the r12 variance root cause (DESIGN.md). A session
-      // serving this many distinct queries holds them all.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    for (w <- Seq("q_group_agg", "q_join_inner", "q_window_over", "q_topk",
-        "q_str_funcs")) {
-      try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case _: Throwable => }
-    }
-
-    // Release anything a previous query left in executor storage so no
-    // timing pays another query's residue: persisted dedup stages (their
-    // own memo-aware clear), cached tables, and any still-registered RDD
-    // blocks (spark.ml fit internals, leaked localCheckpoint generations).
-    def clearResidue(): Unit = {
-      ops.Dedup.clearCaches()
-      // BPE merges must re-train per timed run: the driver-side memo is
-      // invisible to the persistent-RDD sweep, and with it in place
-      // q_bpe_train timed a LocalRelation no-op (~0.03 s) instead of the
-      // 5-round training loop — a 10× regression there would never have
-      // moved the number (r9 review finding; ScaleRehearsal already
-      // cleared it for the same reason)
-      ops.TextAnalysis.clearCaches()
-      // bloom probe functions + broadcasts from decontamination passes:
-      // UUID-named per call, invisible to the persistent-RDD sweep, and
-      // 2+ timed runs × a full suite would accumulate hundreds
-      ops.Curation.clearCaches(spark)
-      ops.Graph.clearCaches() // memoized persisted edge list + sims matrix
-      // per-call LSH signature persists (embeddingNearDup) — the ledger
-      // drain releases the driver-side references the catalog sweep below
-      // can't see (unpersist is idempotent, so double-release is fine)
-      ops.Similarity.clearPersists(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // Similarity.clearCaches() is deliberately NOT called here: the
-      // memoized KMeans centroids are q_ann_ivf_kmeans's own steady-state
-      // (deterministic fit, driver-side KBs — no executor residue another
-      // query could ride on), so min-of-2 measures fit-once reuse, which
-      // is what a long-lived session pays.
-    }
+    val spark = Harness.session(defaultCpus = 4)
+    Harness.warmup(spark, sfDir)
 
     // Load canary: q_group_agg re-timed immediately before every query.
     // min-of-2 per query discards transient spikes but is helpless against
@@ -130,11 +62,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // min of 2 isolated runs per query: each run rebuilds its own caches
-    // (clearResidue between runs), and the min discards transient host
-    // contention / GC pauses — the round-3 bench recorded 2-10× inflation
-    // on ~30 UNCHANGED queries purely from driver-host load, which
-    // single-shot timing cannot distinguish from a plan regression.
     // SPARK_GRAFT_ONLY=qid1,qid2 restricts the run to a subset — for
     // re-adjudicating a single query's timing without paying the full
     // sweep (the one-JSON-line contract is unchanged)
@@ -160,23 +87,12 @@ object Bench {
       case Some(seed) => new scala.util.Random(seed.toLong).shuffle(ordered)
       case None => ordered
     }
-    // force through toRdd, NOT count(): a count() on top lets Catalyst
-    // re-optimize with every output column pruned, and for plans
-    // ending in a row-preserving join (unique-keyed left join — e.g.
-    // q_span_merge/q_span_flag) the whole analytical subtree collapses
-    // to a bare file scan, timing an empty plan. toRdd executes the
-    // query's own physical plan, all columns included, with zero
-    // driver transfer beyond partition counts.
-    def minOf2(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] =
-      best((1 to 2).map { _ =>
-        clearResidue()
-        timed(fn(spark, sfDir).queryExecution.toRdd.count())
-      })
+    def minOf2(fn: Tables.Q): Either[String, Double] =
+      Harness.minOf2(spark)(Harness.force(fn(spark, sfDir)))
     val results =
       scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Double]]
     for ((name, fn) <- runOrder) {
-      clearResidue()
+      Harness.clearResidue(spark)
       val c = canaryTime()
       canaries += c
       canaryBefore(name) = c
@@ -204,32 +120,32 @@ object Bench {
       val flagged = runOrder.filter { case (n, _) =>
         canaryBefore(n) > spikeThr }
       for ((name, fn) <- flagged) {
-        clearResidue()
+        Harness.clearResidue(spark)
         val c = canaryTime()
         canaries += c
         if (c < canaryBefore(name)) canaryBefore(name) = c
-        results(name) = best(Seq(results(name), minOf2(fn)))
+        results(name) = Harness.best(Seq(results(name), minOf2(fn)))
         healed += 1
       }
     }
     // The ANN/SemDeDup rows measure the memoized-codebook steady state
-    // (clearResidue deliberately keeps Similarity's KMeans memo, comment
-    // above). r12 verdict task 3: meter the excluded work explicitly —
-    // one `ann_codebook_fit` line that pays the fit from COLD (memo
+    // (Harness.clearResidue deliberately keeps Similarity's KMeans memo).
+    // r12 verdict task 3: meter the excluded work explicitly — one
+    // `ann_codebook_fit` line that pays the fit from COLD (memo
     // evicted before each run), min-of-2 like every other row, so the
     // published numbers' meaning is unambiguous: q_ann_* = serve cost on
     // a warm codebook, ann_codebook_fit = the once-per-session fit.
     // Full-suite runs only — a subset run stays exactly the rows asked
     // for (additive: no existing row removed or renamed).
     if (only.isEmpty) {
-      clearResidue()
+      Harness.clearResidue(spark)
       val c = canaryTime()
       canaries += c
       canaryBefore("ann_codebook_fit") = c
-      results("ann_codebook_fit") = best((1 to 2).map { _ =>
-        clearResidue()
+      results("ann_codebook_fit") = Harness.best((1 to 2).map { _ =>
+        Harness.clearResidue(spark)
         ops.Similarity.clearCaches()
-        timed(ops.Similarity.prewarmCodebook(spark, sfDir))
+        Harness.timed(ops.Similarity.prewarmCodebook(spark, sfDir))
       })
     }
     val line = renderLine(sfDir,

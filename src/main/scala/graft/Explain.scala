@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for named queries (or a default
   * set of the shuffle-heavy ones) to review pushdown/broadcast/shuffle
   * shape — the "is this the plan I'd want at 100 TB" loop. */
@@ -19,12 +17,7 @@ object Explain {
     val names = if (named.nonEmpty) named
       else Seq("q_group_agg", "q_join_inner", "q_join_asof", "q_topk",
         "q_dedup_minhash", "q_ann_lsh", "q_window_tumbling", "q_rolling_mean")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(defaultCpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
   * plus the similarity family (q_ann_lsh, q_dedup_embedding) and span
   * mining (q_span_dedup), at
   * 1× (straight off `sfDir`) and at mult× (the synthesized corpus), each
-  * timed as min-of-2 isolated runs with the same residue clearing as
-  * [[Bench]], and emits one JSON line with per-workload times, mult×/1×
-  * ratios, and the two scale-correctness verdicts:
+  * timed as min-of-2 isolated runs through [[Harness.minOf2]] (Bench's
+  * residue clearing), and emits one JSON line with per-workload times,
+  * mult×/1× ratios (a workload with no successful run goes to an
+  * `errors` object), and the two scale-correctness verdicts:
   * `cap_fired` (oversized-bucket telemetry observed nonzero at mult×) and
   * `plant_one_split` (the whole planted family landed in a single
   * leakageSafeSplit split via star edges — the co-travel guarantee holding
@@ -116,6 +117,45 @@ object ScaleRehearsal {
     Tables.events(spark, d).groupBy(col("user_id").as("k"))
       .agg(count(lit(1)).as("u_events"))
 
+  /** The chunk cache a stream ramps over: `corpus` split by `idCol` mod
+    * `n` into one parquet file per chunk under `dir`, mtimes ascending so
+    * the file source feeds them in order under maxFilesPerTrigger=1
+    * (rename preserves the mtimes set here). Built once per dir and
+    * reused across runs.
+    *
+    * The cache's completeness marker is the directory's EXISTENCE, so it
+    * must become visible only complete: chunks build into a _build
+    * staging dir renamed into place in one step — a run killed mid-build
+    * leaves only the staging dir (deleted and redone next run), never a
+    * partial cache that would ramp over a fraction of the corpus and
+    * publish it labeled mult× (review finding). The file-count check
+    * heals any partial cache left by older runs. */
+  private def chunkCache(dir: java.io.File, n: Int, corpus: DataFrame,
+      idCol: String): Unit = {
+    if (dir.exists() && Option(dir.listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .count(_.getName.startsWith("chunk_")) != n)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    if (!dir.exists()) {
+      val bld = new java.io.File(s"${dir}_build")
+      org.apache.commons.io.FileUtils.deleteQuietly(bld)
+      bld.mkdirs()
+      for (k <- 0 until n) {
+        val tmp = s"${dir}_tmp_$k"
+        corpus.filter(pmod(col(idCol), lit(n.toLong)) === k)
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val f = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        val dst = new java.io.File(bld, f"chunk_$k%02d.parquet")
+        java.nio.file.Files.copy(f.toPath, dst.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        dst.setLastModified(1000000L * (k + 1))
+      }
+      java.nio.file.Files.move(bld.toPath, dir.toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
   /** Run `body` under temporary SQL confs, restoring priors after. */
   private def withSkewConfs(spark: SparkSession, confs: Map[String, String])(
       body: => Unit): Unit = {
@@ -132,7 +172,6 @@ object ScaleRehearsal {
     // optional comma-separated workload filter for fast local iteration;
     // the per-round jsonl lines are always full (no filter) runs
     val onlyWl = args.lift(2).map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_STATE_STORE=rocksdb swaps the streaming workloads'
     // state backend to RocksDBStateStoreProvider — the configuration the
     // 100 TB deployment story assumes (state on executor-local disk, not
@@ -140,15 +179,8 @@ object ScaleRehearsal {
     // this knob lets the rehearsal MEASURE it, and the emitted line
     // carries which backend produced the numbers.
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // many-workload JVM: same codegen-cache sizing rationale as Bench
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     if (stateStore == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
@@ -172,14 +204,14 @@ object ScaleRehearsal {
     val base = Tables.documents(spark, sfDir)
     val big = (0 until mult).map(replica(base, _)).reduce(_ unionByName _)
       .unionByName(plant(spark, 600))
-    big.repartition(cpus.toInt)
+    big.repartition(cpus)
       .write.mode("overwrite").parquet(s"$bigDir/documents.parquet")
     val nBig = Tables.documents(spark, bigDir).count()
 
     val embBase = Tables.embeddings(spark, sfDir)
     val dim = embBase.selectExpr("size(embedding)").first().getInt(0)
     (0 until mult).map(embReplica(embBase, _, dim)).reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$bigDir/embeddings.parquet")
 
     // events: mult× replicas on DISJOINT user/id spaces, each time-shifted
@@ -196,7 +228,7 @@ object ScaleRehearsal {
         (col("user_id") + lit(k * 10000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$bigDir/events.parquet")
 
     // lineitem/orders: mult× replicas on DISJOINT key spaces — orderkey
@@ -213,7 +245,7 @@ object ScaleRehearsal {
         case c => col(c)
       }: _*)
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$bigDir/lineitem.parquet")
     val ordBase = Tables.orders(spark, sfDir)
     (0 until mult).map { k =>
@@ -223,19 +255,8 @@ object ScaleRehearsal {
         case c => col(c)
       }: _*)
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$bigDir/orders.parquet")
-
-    def clearResidue(): Unit = {
-      ops.Dedup.clearCaches()
-      ops.TextAnalysis.clearCaches() // memoized BPE merges must re-train
-      ops.Curation.clearCaches(spark) // bloom probe functions + broadcasts
-      ops.Graph.clearCaches() // memoized persisted edge list + sims matrix
-      ops.Similarity.clearPersists(spark) // per-call LSH signature persists
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
 
     // ---- recommendation serving-index rehearsal state (r8 task 6) ----
     // The item-item matrix is the corpus-scale artifact; the PROBE BATCH
@@ -530,7 +551,7 @@ object ScaleRehearsal {
       // boilerplate bucket) must stay near-linear, never pairwise
       "simhash64_dedup" -> { d: String =>
         // no clearCaches here: simhashNearDupPairs consults no memo, and
-        // time() already clears residue OUTSIDE the measured region
+        // Harness.minOf2 already clears residue OUTSIDE the measured region
         ops.Dedup.simhashNearDupPairs(
           Tables.documents(spark, d), "doc_id", "text")
           .count(): Unit
@@ -563,26 +584,22 @@ object ScaleRehearsal {
           .queryExecution.toRdd.count(): Unit
       })
 
-    def time(fn: String => Unit, dir: String): Double =
-      (1 to 2).map { _ =>
-        clearResidue()
-        val t0 = System.nanoTime()
-        fn(dir)
-        (System.nanoTime() - t0) / 1e9
-      }.min
-
     val selected =
       if (onlyWl.isEmpty) workloads
       else workloads.filter { case (n, _) => onlyWl(n) }
 
     // warm the scan/agg/join JIT paths once so 1× numbers aren't codegen
-    // noise (same rationale as Bench's warmup)
-    selected.foreach { case (_, fn) => fn(sfDir) }
+    // noise (same rationale as Bench's warmup); a workload that throws
+    // here throws again under the timer and is reported there
+    selected.foreach { case (_, fn) => Harness.timed(fn(sfDir)) }
 
-    val rows = selected.map { case (name, fn) =>
-      val t1 = time(fn, sfDir)
-      val tN = time(fn, bigDir)
-      (name, t1, tN, tN / t1)
+    // min-of-2 at each scale; a workload with no successful run at either
+    // scale has no ratio and goes to the line's `errors` object instead
+    val timings = selected.map { case (name, fn) =>
+      name -> (for {
+        t1 <- Harness.minOf2(spark)(fn(sfDir))
+        tN <- Harness.minOf2(spark)(fn(bigDir))
+      } yield (t1, tN))
     }
 
     // Work-level scaling probe (r12): candidate-pair COUNTS for the
@@ -594,7 +611,7 @@ object ScaleRehearsal {
     if (sys.env.get("SPARK_GRAFT_EMBED_CAND").contains("1")) {
       val w = widthForMult(mult)
       def cand(dir: String, bits: Int): Long = {
-        clearResidue()
+        Harness.clearResidue(spark)
         ops.Similarity.embeddingCandidates(
           Tables.embeddings(spark, dir), "vec_id", "embedding", bits).count()
       }
@@ -611,14 +628,14 @@ object ScaleRehearsal {
     val (ovB, ovD, capFired, onePlantSplit) =
       if (onlyWl.nonEmpty) (-1L, -1L, false, false)
       else {
-        clearResidue()
+        Harness.clearResidue(spark)
         val obs = Observation()
         ops.Dedup.nearDedup(Tables.documents(spark, bigDir), "doc_id", "text",
           obs = Some(obs)).count()
         val b = obs.get("oversized_buckets").asInstanceOf[Long]
         val dd = obs.get("oversized_docs").asInstanceOf[Long]
 
-        clearResidue()
+        Harness.clearResidue(spark)
         val plantSplits = ops.Dedup
           .leakageSafeSplit(Tables.documents(spark, bigDir), "doc_id", "text")
           .filter(col("source") === "plant")
@@ -646,7 +663,7 @@ object ScaleRehearsal {
         chunkSource: () => DataFrame =
           () => Tables.documents(spark, bigDir).select("doc_id", "text"),
         idCol: String = "doc_id"): String = {
-      clearResidue()
+      Harness.clearResidue(spark)
       // a fresh measurement every run: a surviving checkpoint from a
       // previous run at this scratch would resume from committed offsets,
       // see no new files, and emit an empty-batches junk line (or, after
@@ -660,43 +677,8 @@ object ScaleRehearsal {
       Option(new java.io.File(srcDir).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("steady_"))
         .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(f))
-      var schema: org.apache.spark.sql.types.StructType = null
-      val srcDirF = new java.io.File(srcDir)
-      // the chunk cache's completeness marker is the directory's
-      // EXISTENCE, so it must become visible only complete: chunks build
-      // into a _build staging dir renamed into place in one step — a run
-      // killed mid-build leaves only the staging dir (deleted and redone
-      // next run), never a partial cache that would ramp over a fraction
-      // of the corpus and publish it labeled mult× (review finding). The
-      // file-count check heals any partial cache left by older runs.
-      if (srcDirF.exists() && Option(srcDirF.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .count(_.getName.startsWith("chunk_")) != streamChunks)
-        org.apache.commons.io.FileUtils.deleteQuietly(srcDirF)
-      if (!srcDirF.exists()) {
-        val corpus = chunkSource()
-        schema = corpus.schema
-        val bld = new java.io.File(s"$scratch/${srcTag}_build")
-        org.apache.commons.io.FileUtils.deleteQuietly(bld)
-        bld.mkdirs()
-        // one parquet file per chunk, mtimes ascending so the file source
-        // feeds them in order under maxFilesPerTrigger=1 (rename preserves
-        // the mtimes set here)
-        for (k <- 0 until streamChunks) {
-          val tmp = s"$scratch/stream_tmp_$k"
-          corpus.filter(pmod(col(idCol), lit(streamChunks.toLong)) === k)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(bld, f"chunk_$k%02d.parquet")
-          java.nio.file.Files.copy(f.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(1000000L * (k + 1))
-        }
-        java.nio.file.Files.move(bld.toPath, srcDirF.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      if (schema == null) schema = chunkSource().schema
+      chunkCache(new java.io.File(srcDir), streamChunks, chunkSource(), idCol)
+      val schema = chunkSource().schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       // noop sink: pair volume at mult× would swamp a memory sink
@@ -835,18 +817,25 @@ object ScaleRehearsal {
     // fault-isolated — one failed design emits an error line, the others
     // still report. Selectable per name (plus the legacy collective key
     // "streaming_simhash" older invocations used).
-    val wl = rows.map { case (n, t1, tN, r) =>
-      s""""$n":{"x1":${f"$t1%.3f"},"x$mult":${f"$tN%.3f"},"ratio":${f"$r%.2f"}}"""
+    val wl = timings.collect { case (n, Right((t1, tN))) =>
+      s""""$n":{"x1":${f"$t1%.3f"},"x$mult":${f"$tN%.3f"},""" +
+        s""""ratio":${f"${tN / t1}%.2f"}}"""
     }.mkString("{", ",", "}")
+    val errors = timings.collect { case (n, Left(e)) => s""""$n":${jsonStr(e)}""" }
+    val errJson =
+      if (errors.isEmpty) "" else errors.mkString(""""errors":{""", ",", "},")
     println(s"""{"metric":"scale_rehearsal","mult":$mult,"rows_x$mult":$nBig,""" +
-      s""""workloads":$wl,"oversized_buckets":$ovB,"oversized_docs":$ovD,""" +
+      s""""workloads":$wl,$errJson"oversized_buckets":$ovB,"oversized_docs":$ovD,""" +
       s""""cap_fired":$capFired,"plant_one_split":$onePlantSplit,""" +
       s""""sf":"$sfDir"}""")
 
     def wantStream(n: String): Boolean =
       onlyWl.isEmpty || onlyWl(n) || onlyWl("streaming_simhash")
-    def safeStream(n: String)(run: => String): Option[String] =
-      if (!wantStream(n)) None
+    // one stream workload's line, or its error line if it throws —
+    // run only when `want` selects it
+    def isolated(want: String => Boolean)(n: String)(run: => String)
+        : Option[String] =
+      if (!want(n)) None
       else try Some(run) catch {
         case e: Exception => Some(
           s"""{"metric":"streaming_rehearsal","mult":$mult,""" +
@@ -854,13 +843,13 @@ object ScaleRehearsal {
             s""""sf":"$sfDir"}""")
       }
     val streamJsons = Seq(
-      safeStream("simhash_ingest")(
+      isolated(wantStream)("simhash_ingest")(
         runStreamWorkload("simhash_ingest",
           st => streaming.StreamingDedup.detectSimhash(st).toDF())),
-      safeStream("minhash_ingest")(
+      isolated(wantStream)("minhash_ingest")(
         runStreamWorkload("minhash_ingest",
           st => streaming.StreamingDedup.detect(st).toDF())),
-      safeStream("embedding_ingest")(
+      isolated(wantStream)("embedding_ingest")(
         runStreamWorkload("embedding_ingest",
           st => streaming.StreamingDedup
             .detectEmbedding(st, bits = widthForMult(mult)).toDF(),
@@ -895,36 +884,10 @@ object ScaleRehearsal {
         srcTag: String,
         chunkSource: () => DataFrame,
         idCol: String): String = {
-      clearResidue()
+      Harness.clearResidue(spark)
       val cacheDir = new java.io.File(s"$scratch/${srcTag}_c24")
-      var schema: org.apache.spark.sql.types.StructType = null
-      // same atomic-build + completeness-check discipline as the 8-chunk
-      // cache above (partial caches must never publish as mult×)
-      if (cacheDir.exists() && Option(cacheDir.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .count(_.getName.startsWith("chunk_")) != compactChunks)
-        org.apache.commons.io.FileUtils.deleteQuietly(cacheDir)
-      if (!cacheDir.exists()) {
-        val corpus = chunkSource()
-        schema = corpus.schema
-        val bld = new java.io.File(s"$scratch/${srcTag}_c24_build")
-        org.apache.commons.io.FileUtils.deleteQuietly(bld)
-        bld.mkdirs()
-        for (k <- 0 until compactChunks) {
-          val tmp = s"$scratch/c24_tmp_$k"
-          corpus.filter(pmod(col(idCol), lit(compactChunks.toLong)) === k)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(bld, f"chunk_$k%02d.parquet")
-          java.nio.file.Files.copy(f.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(1000000L * (k + 1))
-        }
-        java.nio.file.Files.move(bld.toPath, cacheDir.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      if (schema == null) schema = chunkSource().schema
+      chunkCache(cacheDir, compactChunks, chunkSource(), idCol)
+      val schema = chunkSource().schema
       val runTag = java.util.UUID.randomUUID().toString
         .replace("-", "").take(8)
       val idxTbl = s"graft_cmp_idx_$runTag"
@@ -1054,16 +1017,8 @@ object ScaleRehearsal {
     // selectable ONLY by their own names (plus full runs): the legacy
     // collective key must keep meaning the three pure-stateful rows
     def wantCompact(n: String): Boolean = onlyWl.isEmpty || onlyWl(n)
-    def safeCompact(n: String)(run: => String): Option[String] =
-      if (!wantCompact(n)) None
-      else try Some(run) catch {
-        case e: Exception => Some(
-          s"""{"metric":"streaming_rehearsal","mult":$mult,""" +
-            s""""workload":"$n","error":${jsonStr(e.toString.take(300))},""" +
-            s""""sf":"$sfDir"}""")
-      }
     val compactJsons = Seq(
-      safeCompact("minhash_ingest_compacting")(
+      isolated(wantCompact)("minhash_ingest_compacting")(
         runCompactingWorkload("minhash_ingest_compacting",
           st => streaming.StreamingDedup.detect(st).toDF(),
           (st, idx) => streaming.StreamingDedup.nearDupPairsWithIndex(
@@ -1074,7 +1029,7 @@ object ScaleRehearsal {
           "stream_src",
           () => Tables.documents(spark, bigDir).select("doc_id", "text"),
           "doc_id")),
-      safeCompact("embedding_ingest_compacting")(
+      isolated(wantCompact)("embedding_ingest_compacting")(
         runCompactingWorkload("embedding_ingest_compacting",
           st => streaming.StreamingDedup
             .detectEmbedding(st, bits = widthForMult(mult)).toDF(),
@@ -1091,7 +1046,7 @@ object ScaleRehearsal {
           () => Tables.embeddings(spark, bigDir)
             .select("vec_id", "embedding"),
           "vec_id")),
-      safeCompact("simhash_ingest_compacting")(
+      isolated(wantCompact)("simhash_ingest_compacting")(
         runCompactingWorkload("simhash_ingest_compacting",
           st => streaming.StreamingDedup.detectSimhash(st).toDF(),
           (st, idx) => streaming.StreamingDedup.simhashPairsWithIndex(

@@ -27,7 +27,7 @@ object Tables {
     * and computes from scratch. It is the path-based-read equivalent of
     * what a catalog table gets for free (schema from the metastore, the
     * session file-listing cache — guide §6), and of the codegen cache:
-    * session metadata, deliberately NOT swept by Bench's clearResidue.
+    * session metadata, deliberately NOT swept by Harness.clearResidue.
     * Invalidation caveat: a dir whose files are rewritten mid-session
     * needs [[clearReaderCache]] (tests that regenerate corpora under the
     * same path). */

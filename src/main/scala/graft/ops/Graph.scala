@@ -56,7 +56,7 @@ object Graph {
     * persisted their own copy with no in-query unpersist possible (the
     * returned plans are lazy), so a multi-query session pinned the same
     * data three times (review finding). Cleared by [[clearCaches]], which
-    * Bench/ScaleRehearsal's clearResidue call between timed runs — so
+    * Harness.clearResidue calls between timed runs — so
     * per-query bench numbers still pay the build. */
   private val edgeCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
@@ -66,7 +66,7 @@ object Graph {
     * identical [[itemSims]] build (the single most expensive shared stage
     * in the graph family, ~6 s at sf0.1), so a Verify session used to pay
     * it twice (r10 verdict task). Same lifecycle as [[edgeCache]]: evicted
-    * + unpersisted by [[clearCaches]], which Bench's clearResidue calls
+    * + unpersisted by [[clearCaches]], which Harness.clearResidue calls
     * between timed runs so per-query numbers still pay the build. */
   private val simsCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]

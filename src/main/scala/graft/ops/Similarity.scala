@@ -67,7 +67,7 @@ object Similarity {
   }
 
   /** Unpersist and drop every ledgered persist for `session`. Separate
-    * from [[clearCaches]]() on purpose: Bench's clearResidue must release
+    * from [[clearCaches]]() on purpose: Harness.clearResidue must release
     * per-call persists WITHOUT evicting the memoized KMeans centroids
     * (q_ann_ivf_kmeans's deterministic fit-once steady state). */
   def clearPersists(session: SparkSession): Unit =
@@ -319,7 +319,7 @@ object Similarity {
     // otherwise recompute the whole scan+norm+signature pipeline from
     // lineage (review finding). The cache lives as long as the returned
     // lazy plan; Spark evicts LRU, and the ledger drain (clearPersists /
-    // Bench clearResidue) or spark.catalog.clearCache releases it
+    // Harness.clearResidue) or spark.catalog.clearCache releases it
     // explicitly — without the ledger every call leaked one entry.
     // nullif: a zero-norm vector must yield a NULL cosine (excluded by
     // the >= filter) in BOTH engines, not an ANSI DIVIDE_BY_ZERO crash.

@@ -756,7 +756,7 @@ object TextAnalysis {
     * the trainer ([[bpeMerges]]) and the applier (q_bpe_apply), which
     * previously each rebuilt it with their own documents scan + explode +
     * groupBy(w). Cleared (with unpersist) by [[clearCaches]], which
-    * Bench's clearResidue calls between timed runs — each bench timing
+    * Harness.clearResidue calls between timed runs — each bench timing
     * still pays one full build. */
   private def bpeCharVocab(s: SparkSession, d: String) =
     Tables.documents(s, d)

@@ -128,14 +128,35 @@ class BenchVerdictSpec extends AnyFunSuite {
 
   test("a run that throws is an error, not a time; the min is taken over " +
       "successful runs only") {
-    val boom = Bench.timed(throw new IllegalStateException("boom"))
+    val boom = Harness.timed(throw new IllegalStateException("boom"))
     assert(boom.left.exists(_.contains("boom")))
-    val ok = Bench.timed(Thread.sleep(20))
+    val ok = Harness.timed(Thread.sleep(20))
     assert(ok.exists(_ >= 0.02))
-    assert(Bench.best(Seq(boom, ok)) == ok, "a fast failure never wins the min")
-    assert(Bench.best(Seq(Right(2.0), Right(1.0))) == Right(1.0))
-    assert(Bench.best(Seq(boom, Left("later"))) == Left("later"),
+    assert(Harness.best(Seq(boom, ok)) == ok, "a fast failure never wins the min")
+    assert(Harness.best(Seq(Right(2.0), Right(1.0))) == Right(1.0))
+    assert(Harness.best(Seq(boom, Left("later"))) == Left("later"),
       "with no successful run the row is the last error")
+  }
+
+  private val stages = Seq(
+    Profile.Stage(3, "count at X", ms = 1200, tasks = 4, taskMs = 3500,
+      gcMs = 250, shufRead = 2L << 20, shufWrite = 0, input = 0),
+    Profile.Stage(2, "map at X", ms = 800, tasks = 8, taskMs = 1500,
+      gcMs = 0, shufRead = 0, shufWrite = 2L << 20, input = 1000))
+
+  test("Profile: a failed run prints its error, never a time or a census") {
+    val line = Profile.runLine("q_a", 2, Left("java.lang.RuntimeException: boom"),
+      jobs = 3, stages)
+    assert(line == "ERR q_a 2: java.lang.RuntimeException: boom")
+    assert(!line.contains("sec="))
+  }
+
+  test("Profile: a successful run prints its time and the run's census") {
+    val line = Profile.runLine("q_a", 1, Right(1.5), jobs = 3, stages)
+    assert(line.startsWith("RUN q_a "))
+    for (field <- Seq("sec=  1.500", "jobs=  3", "stages=  2", "tasks=   12",
+        "taskSec=    5.00", "gcSec=  0.25", "shufR=     2MB", "shufW=     2MB"))
+      assert(line.contains(field), s"$field missing from: $line")
   }
 
   /** Two clean rows; `cleanLine` pins a clean run's line byte for byte. */

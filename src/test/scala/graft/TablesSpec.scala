@@ -74,4 +74,24 @@ class TablesSpec extends SparkSpec {
     assert(out(0) == out(1), "both layouts must normalize identically")
     assert(out(0).getLong(1) == micros)
   }
+
+  test("Harness.clearResidue drops persisted blocks and cached tables, " +
+      "and keeps the reader frames") {
+    val li = Tables.lineitem(spark, sf)
+    li.select("l_orderkey").persist().count()
+    // an RDD only the persistent-RDD sweep can see (spark.ml fit internals)
+    spark.sparkContext.parallelize(1 to 4).persist().count()
+    li.createOrReplaceTempView("graft_residue_probe")
+    spark.catalog.cacheTable("graft_residue_probe")
+    spark.table("graft_residue_probe").count()
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    assert(spark.catalog.isCached("graft_residue_probe"))
+    try {
+      Harness.clearResidue(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(!spark.catalog.isCached("graft_residue_probe"))
+      // reader metadata is a declared keep: the same frame object
+      assert(Tables.lineitem(spark, sf) eq li)
+    } finally spark.catalog.dropTempView("graft_residue_probe")
+  }
 }
