@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftshim.GraftEvents
 
 /** Dev measurement tool (guide §1): run named queries `n` times each in one
   * JVM under Bench's hygiene (Harness session, warm-up, clearResidue before
@@ -34,7 +35,7 @@ object Profile {
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
       val m = si.taskMetrics
-      val st = Stage(si.stageId, si.name.takeWhile(_ != '\n'),
+      val st = Stage(si.stageId, stageLabel(si.name, GraftEvents.rddScopes(si)),
         si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
         si.numTasks, m.executorRunTime, m.jvmGCTime,
         m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
@@ -44,6 +45,17 @@ object Profile {
     def reset(): Unit = synchronized { jobs = 0; stages.clear() }
     def snapshot(): (Int, Vector[Stage]) = synchronized { (jobs, stages.toVector) }
   }
+
+  /** A stage's label: the operation scope of the last RDD it builds that
+    * has one (RDD ids grow from parent to child), e.g. `Exchange` or
+    * `WholeStageCodegen (2)`; the first line of its call-site name only
+    * when no RDD has a scope. AQE submits query stages from a pool thread,
+    * so their call site reads `… at CompletableFuture.java:…` and names no
+    * operator. */
+  private[graft] def stageLabel(callSite: String,
+      rddScopes: Seq[(Int, Option[String])]): String =
+    rddScopes.sortBy(-_._1).collectFirst { case (_, Some(scope)) => scope }
+      .getOrElse(callSite.takeWhile(_ != '\n'))
 
   /** One run's line, pure so BenchVerdictSpec pins it: a failed run prints
     * its error with no time and no census. */
@@ -81,10 +93,8 @@ object Profile {
         Harness.clearResidue(spark)
         census.reset()
         val result = Harness.timed(Harness.force(fn(spark, sfDir)))
-        // stage completions arrive async on the listener bus; give it a
-        // beat to drain (a lost straggler event only undercounts that
-        // run's census, never the wall time)
-        Thread.sleep(300)
+        // stage completions arrive async on the listener bus
+        GraftEvents.drain(spark.sparkContext)
         val (jobs, stages) = census.snapshot()
         println(runLine(qid, run, result, jobs, stages))
         if (result.isRight) lastOk = Some((run, stages))

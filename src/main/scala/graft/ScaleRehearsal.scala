@@ -149,6 +149,7 @@ object ScaleRehearsal {
         val dst = new java.io.File(bld, f"chunk_$k%02d.parquet")
         java.nio.file.Files.copy(f.toPath, dst.toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
         dst.setLastModified(1000000L * (k + 1))
       }
       java.nio.file.Files.move(bld.toPath, dir.toPath,
@@ -729,6 +730,7 @@ object ScaleRehearsal {
               .filter(_.getName.endsWith(".parquet")).head
             java.nio.file.Files.move(built.toPath, cached.toPath,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
           }
           // per-run throwaway copy: REPLACE_EXISTING heals a copy killed
           // mid-write on a previous run; the mtime is set BEFORE the

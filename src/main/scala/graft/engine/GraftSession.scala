@@ -38,9 +38,10 @@ final case class GraftConfig(
     maxRetries: Int = 3,
     showSql: Boolean = false,
     anonymizeHead: Boolean = false,
-    // exact df.count() per frame described (reference shape parity; a
-    // frame is described once per session until clearCache — flip off at
-    // large scale to use free optimizer stats / "unknown")
+    // exact row count per frame described (reference shape parity): at
+    // most one count job, none for a driver-local frame, and a frame is
+    // described once per session until clearCache. Flip off at large
+    // scale to use free optimizer stats / "unknown" for non-local frames.
     exactRowCount: Boolean = true,
     // generated SQL may ONLY call these functions — DEFAULT ON with the
     // curated deterministic analytics surface, matching the reference's

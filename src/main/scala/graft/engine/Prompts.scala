@@ -3,6 +3,8 @@ package graft.engine
 import java.time.LocalDate
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftshim.GraftDataset
 
 /** Prompt templates — SURVEY.md §2.1 prompt-template mapping.
   *
@@ -24,14 +26,23 @@ object Prompts {
   }
 
   /** Row count for the prompt. The reference embeds exact df.shape — O(1)
-    * in polars but a full scan in Spark. Default: use Catalyst's stats
-    * estimate when the optimizer has one (free), fall back to -1
-    * ("unknown") rather than scanning; `exact = true` forces a count for
-    * small-data reference parity. */
+    * in polars; here it costs at most one Spark job, and none when the
+    * rows are already on the driver:
+    *  - a frame whose optimized plan is a `LocalRelation` (a
+    *    `createDataFrame` frame, also after filters and projections the
+    *    optimizer folds into it) returns its row array's length, in both
+    *    modes;
+    *  - `exact = true` (reference parity) counts any other frame over its
+    *    column-pruned plan as one SQL execution (`GraftDataset.count`):
+    *    one job with no exchange for a scan, no column read;
+    *  - `exact = false` takes Catalyst's stats estimate when the optimizer
+    *    has one (free), else -1 ("unknown") rather than scanning. */
   def rowCount(df: DataFrame, exact: Boolean): Long =
-    if (exact) df.count()
-    else df.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.longValue).getOrElse(-1L)
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation => local.data.length.toLong
+      case _ if exact => GraftDataset.count(df)
+      case plan => plan.stats.rowCount.map(_.longValue).getOrElse(-1L)
+    }
 
   /** Render schema + first rows as text (the prompt's only schema channel).
     * Collect is bounded to `n` rows — never a full materialization.
@@ -42,9 +53,12 @@ object Prompts {
     * deterministic type-shaped placeholders, so the model still sees shape
     * and dtypes but no data leaves the cluster in prompts.
     *
-    * Runs the exact count (if asked for) and the head collect as Spark
-    * jobs; GraftSession calls it once per frame object per session and
-    * reuses the result. */
+    * Costs at most two Spark jobs: one for the row count (see `rowCount`;
+    * none for a driver-local frame or an estimate) and one for the head
+    * collect (none for a driver-local frame). The count reads no column,
+    * so it is kept apart from the head rather than folded into one
+    * all-columns pass. GraftSession calls it once per frame object per
+    * session and reuses the result. */
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
     val header = schemaHeader(df)

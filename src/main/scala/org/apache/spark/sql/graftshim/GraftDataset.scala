@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bridge to the package-private Dataset constructor so library code can
@@ -22,4 +23,16 @@ object GraftDataset {
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Rows of `df`, counted over its column-pruned plan (`select()`, a
+    * `Project(Nil)` that keeps every row and reads no column) with
+    * `toRdd.count()`: one job with no exchange for a scan, where
+    * `Dataset.count()` over several partitions plans an aggregate whose
+    * exchange costs a second job under AQE. It runs as one SQL execution whose call site is the
+    * caller's line (`count at <caller's file>:<line>`), so listeners see it
+    * like any other action. */
+  def count(df: DataFrame): Long = {
+    val qe = df.select().queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
+  }
 }

@@ -159,6 +159,23 @@ class BenchVerdictSpec extends AnyFunSuite {
       assert(line.contains(field), s"$field missing from: $line")
   }
 
+  test("Profile: a stage is labelled by the operation scope of its last RDD") {
+    val aqeSite = "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768\n" +
+      "java.base/java.util.concurrent.CompletableFuture..."
+    assert(Profile.stageLabel(aqeSite, Seq(
+      4 -> Some("Scan parquet "), 6 -> Some("Exchange"),
+      5 -> Some("WholeStageCodegen (1)"))) == "Exchange")
+    assert(Profile.stageLabel(aqeSite, Seq(
+      9 -> Some("WholeStageCodegen (2)"), 8 -> Some("AQEShuffleRead"))) ==
+      "WholeStageCodegen (2)")
+    assert(Profile.stageLabel("count at X.scala:3", Seq(
+      7 -> None, 6 -> Some("WholeStageCodegen (3)"))) == "WholeStageCodegen (3)",
+      "a scope-less last RDD (toRdd's wrapper) yields to the last scoped one")
+    assert(Profile.stageLabel("count at X.scala:3\nstack", Seq(2 -> None)) ==
+      "count at X.scala:3", "a scope-less stage falls back to its call site")
+    assert(Profile.stageLabel("count at X.scala:3", Nil) == "count at X.scala:3")
+  }
+
   /** Two clean rows; `cleanLine` pins a clean run's line byte for byte. */
   private def smallLine(results: Seq[(String, Double)],
       errors: Seq[(String, String)]): String =

@@ -415,6 +415,87 @@ class EngineSpec extends SparkSpec {
     assert(llm.lastPrompt.get.contains("banana"), "the parent's memo is its own")
   }
 
+  /** Spark jobs `body` submits, counted exactly: they carry a fresh job
+    * group, and the listener bus is drained before the count is read. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    jobs.get
+  }
+
+  test("describing a frame runs one job per statistic, none for driver-local rows") {
+    val local = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, "x"), Row(2L, "y"), Row(3L, "z")),
+      org.apache.spark.sql.types.StructType.fromDDL("a BIGINT, s STRING"))
+    var ctx: Prompts.TableCtx = null
+    assert(jobsOf { ctx = Prompts.describe("df", local) } == 0,
+      "a createDataFrame frame's count and head are read on the driver")
+    assert(ctx.rows == 3 && ctx.head.linesIterator.size == 4, ctx)
+    assert(jobsOf { ctx = Prompts.describe("df", freshDf.filter($"b" > 2)) } == 0,
+      "a filter the optimizer folds into the local rows stays driver-local")
+    assert(ctx.rows == 3, ctx)
+    assert(jobsOf { ctx = Prompts.describe("df", spark.range(1, 6, 1, 1).toDF()) } == 2,
+      "one count job and one head job")
+    assert(ctx.rows == 5, ctx)
+    // over several partitions Dataset.count() needs an exchange, which
+    // costs a second job under AQE; the column-pruned count needs none
+    assert(jobsOf { ctx = Prompts.describe("df", spark.range(0, 100, 1, 4).toDF()) } == 2,
+      "one count job and one head job, also over several partitions")
+    assert(ctx.rows == 100, ctx)
+  }
+
+  test("rowCount(exact) equals Dataset.count on every frame shape") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
+    try {
+      spark.range(0, 100, 1, 3).selectExpr("id", "id % 7 AS k", "'v' || id AS v")
+        .write.mode("overwrite").parquet(dir)
+      val table = spark.read.parquet(dir)
+      val keys = spark.range(0, 7).selectExpr("id AS k", "id * 10 AS w")
+      val frames = Seq(
+        "local" -> freshDf,
+        "empty local" -> Seq.empty[(Int, String)].toDF("a", "s"),
+        "range" -> spark.range(1, 6, 1, 1).toDF("a"),
+        "filtered parquet" -> table.filter($"k" === 3 && $"v" =!= "v3"),
+        "aggregate" -> table.groupBy("k").count(),
+        "limit" -> table.limit(7),
+        "union" -> table.union(table.filter($"k" < 2)),
+        "left join" -> table.join(keys, Seq("k"), "left"))
+      for ((shape, df) <- frames) {
+        val n = df.count()
+        assert(Prompts.rowCount(df, exact = true) == n, shape)
+        assert(n > 0 || shape == "empty local", shape)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("exactRowCount = false: driver-local rows are still counted exactly; " +
+      "other frames say unknown and run only the head job") {
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm, GraftConfig(exactRowCount = false))
+    assert(s.ask(freshDf, "how many rows?").text == "5")
+    assert(llm.lastPrompt.get.contains("Table `df`, with 5 rows"), llm.lastPrompt.get)
+    val range = spark.range(1, 6, 1, 1).toDF("a")
+    assert(s.ask(range, "how many rows?").text == "5")
+    assert(llm.lastPrompt.get.contains("Table `df`, with an unknown number of rows"),
+      llm.lastPrompt.get)
+    var ctx: Prompts.TableCtx = null
+    assert(jobsOf { ctx = Prompts.describe("df", range, exactRowCount = false) } == 1,
+      "the head collect only")
+    assert(ctx.rows == -1, ctx)
+  }
+
   test("cache key format on disk is unchanged; a failing cached SQL " +
       "builds the full table block for its correction") {
     val path = java.nio.file.Files.createTempFile("graft_cache_key", ".json")
