@@ -129,7 +129,7 @@ object Bench {
       }
     }
     // The ANN/SemDeDup rows measure the memoized-codebook steady state
-    // (Harness.clearResidue deliberately keeps Similarity's KMeans memo).
+    // (Harness.clearResidue keeps the FittedModel scope).
     // r12 verdict task 3: meter the excluded work explicitly — one
     // `ann_codebook_fit` line that pays the fit from COLD (memo
     // evicted before each run), min-of-2 like every other row, so the
@@ -143,8 +143,7 @@ object Bench {
       canaries += c
       canaryBefore("ann_codebook_fit") = c
       results("ann_codebook_fit") = Harness.best((1 to 2).map { _ =>
-        Harness.clearResidue(spark)
-        ops.Similarity.clearCaches()
+        SessionMemo.clear(spark, SessionMemo.FittedModel)
         Harness.timed(ops.Similarity.prewarmCodebook(spark, sfDir))
       })
     }

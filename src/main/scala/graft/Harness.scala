@@ -40,39 +40,16 @@ object Harness {
       catch { case _: Throwable => }
     }
 
-  /** Release anything a previous query left in executor storage so no
-    * timing pays another query's residue: persisted dedup stages (their
-    * own memo-aware clear), cached tables, and any still-registered RDD
-    * blocks (spark.ml fit internals, leaked localCheckpoint generations).
-    *
-    * Kept on purpose: the `Tables` reader frames (metadata only, see
-    * Tables.readerCache), the codegen cache, and the KMeans memo below. */
+  /** Release anything a previous query left so no timing pays another
+    * query's residue: the session's swept memos ([[SessionMemo.Swept]]),
+    * cached tables, and any still-registered RDD blocks (spark.ml fit
+    * internals, leaked localCheckpoint generations). The other scopes and
+    * the codegen cache are kept on purpose (see their declarations). */
   def clearResidue(spark: SparkSession): Unit = {
-    ops.Dedup.clearCaches()
-    // BPE merges must re-train per timed run: the driver-side memo is
-    // invisible to the persistent-RDD sweep, and with it in place
-    // q_bpe_train timed a LocalRelation no-op (~0.03 s) instead of the
-    // 5-round training loop — a 10× regression there would never have
-    // moved the number (r9 review finding; ScaleRehearsal already
-    // cleared it for the same reason)
-    ops.TextAnalysis.clearCaches()
-    // bloom probe functions + broadcasts from decontamination passes:
-    // UUID-named per call, invisible to the persistent-RDD sweep, and
-    // 2+ timed runs × a full suite would accumulate hundreds
-    ops.Curation.clearCaches(spark)
-    ops.Graph.clearCaches() // memoized persisted edge list + sims matrix
-    // per-call LSH signature persists (embeddingNearDup) — the ledger
-    // drain releases the driver-side references the catalog sweep below
-    // can't see (unpersist is idempotent, so double-release is fine)
-    ops.Similarity.clearPersists(spark)
+    SessionMemo.clear(spark, SessionMemo.Swept)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    // Similarity.clearCaches() is deliberately NOT called here: the
-    // memoized KMeans centroids are q_ann_ivf_kmeans's own steady-state
-    // (deterministic fit, driver-side KBs — no executor residue another
-    // query could ride on), so min-of-2 measures fit-once reuse, which
-    // is what a long-lived session pays.
   }
 
   /** The timed body: force through toRdd, NOT count(). A count() on top

@@ -551,7 +551,7 @@ object ScaleRehearsal {
       // (all-distinct signatures) plus the 600-member plant (one capped
       // boilerplate bucket) must stay near-linear, never pairwise
       "simhash64_dedup" -> { d: String =>
-        // no clearCaches here: simhashNearDupPairs consults no memo, and
+        // no memo clear here: simhashNearDupPairs consults no memo, and
         // Harness.minOf2 already clears residue OUTSIDE the measured region
         ops.Dedup.simhashNearDupPairs(
           Tables.documents(spark, d), "doc_id", "text")

@@ -19,29 +19,14 @@ object Tables {
     * it again for every table it touches — the single largest component
     * of the suite's small-query floor (measured: q_topk end-to-end
     * 192 ms, of which 82 ms was reader construction vs 30 ms of actual
-    * Catalyst planning).
-    *
-    * This memo holds METADATA ONLY — a lazy, unexecuted plan (resolved
-    * schema + file listing); no rows, no results, nothing persisted in
-    * executor storage. Every timed run still scans the parquet from disk
-    * and computes from scratch. It is the path-based-read equivalent of
-    * what a catalog table gets for free (schema from the metastore, the
-    * session file-listing cache — guide §6), and of the codegen cache:
-    * session metadata, deliberately NOT swept by Harness.clearResidue.
-    * Invalidation caveat: a dir whose files are rewritten mid-session
-    * needs [[clearReaderCache]] (tests that regenerate corpora under the
-    * same path). */
-  private val readerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Drop memoized reader frames — all of them, or one session's. */
-  def clearReaderCache(): Unit = readerCache.clear()
-  def clearReaderCache(session: SparkSession): Unit =
-    readerCache.keys.filter(_._1 eq session).foreach(readerCache.remove)
+    * Catalyst planning). Metadata scope: a residue clear keeps it, and
+    * [[SessionMemo.clear]]`(session)` invalidates it. */
+  private val readerCache = SessionMemo[String, DataFrame](
+    "Tables", SessionMemo.Metadata, SessionMemo.noRelease)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    readerCache.getOrElseUpdate((spark, path), spark.read.parquet(path))
+    readerCache.getOrElseUpdate(spark, path, spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.Q
 
 /** Training-data curation operators beyond the dedup/similarity families
@@ -134,16 +134,21 @@ object Curation {
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("pack_tokens"))
   }
 
-  /** Per-session ledger of bloom probe registrations: (function name,
-    * broadcast) pairs [[registerBloom]] created. Each decontamination
-    * pass registers a UUID-named temp function holding a broadcast of
-    * the full serialized bitset; without a release hook a long-lived
-    * session accumulates both (review finding). [[clearCaches]] drains
-    * the ledger — call it when the frames returned by earlier
-    * decontaminate() calls are no longer live. */
-  private val bloomLedger = scala.collection.concurrent.TrieMap
-    .empty[SparkSession,
-      List[(String, org.apache.spark.broadcast.Broadcast[Array[Byte]])]]
+  /** Per-session ledger of bloom probe registrations, keyed by function
+    * name: (name, broadcast) for each probe [[registerBloom]] created. Each
+    * decontamination pass registers a UUID-named temp function holding a
+    * broadcast of the full serialized bitset; without a release hook a
+    * long-lived session accumulates both (review finding). Swept: the
+    * release drops the function and destroys its broadcast, so frames
+    * returned by earlier decontaminate() calls stop being executable —
+    * release between pipeline runs, not mid-plan. */
+  private val bloomLedger = SessionMemo[String,
+      (String, org.apache.spark.broadcast.Broadcast[Array[Byte]])](
+    "Curation", SessionMemo.Swept, { case (session, (fname, bc)) =>
+      session.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
+      bc.destroy()
+    })
 
   /** Build a bloom filter over xxhash64 of `shingles.shingle`, broadcast
     * the serialized bytes, register a session-unique probe function, and
@@ -166,23 +171,16 @@ object Curation {
     val fname = "graft_bloom_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     graft.functions.BloomFunctions.registerBroadcast(s, fname, bc)
-    bloomLedger.updateWith(s) {
-      case Some(l) => Some((fname, bc) :: l)
-      case None => Some(List((fname, bc)))
-    }
+    bloomLedger.put(s, fname, (fname, bc))
     fname
   }
 
   /** Release every bloom probe function and broadcast [[registerBloom]]
-    * created for `session`. Frames returned by earlier decontaminate()
-    * calls stop being executable after this — release between pipeline
-    * runs, not mid-plan (same contract as the other ops' clearCaches). */
+    * created for `session`. perfbench's `OpsWorkload.clearResidue` is its
+    * only caller, and it goes with the next benchmark change; teardown is
+    * [[graft.SessionMemo.clear]]. */
   def clearCaches(session: SparkSession): Unit =
-    bloomLedger.remove(session).getOrElse(Nil).foreach { case (fname, bc) =>
-      session.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
-      bc.destroy()
-    }
+    SessionMemo.sweep("Curation", Some(session))
 
   /** PUBLIC API — benchmark decontamination: remove from `df` every row
     * whose `textCol` shares at least one 3-word shingle with `evalDf`'s
@@ -201,8 +199,8 @@ object Curation {
     * its cache has served the count and the bloom build — the returned
     * plan's exact join reads the local rows, so the shingling never
     * recomputes at action time and no cache outlives this call. Call
-    * [[clearCaches]] when returned frames are no longer live to release
-    * the bloom broadcasts. */
+    * [[graft.SessionMemo.clear]] when returned frames are no longer live
+    * to release the bloom broadcasts. */
   def decontaminate(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, evalDf: org.apache.spark.sql.DataFrame,
       evalTextCol: String, fpp: Double = 0.01): org.apache.spark.sql.DataFrame = {

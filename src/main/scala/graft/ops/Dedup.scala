@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.Q
 
 /** Deduplication operators for LLM training-data pipelines (builder-prompt
@@ -27,36 +27,13 @@ import graft.Tables.Q
   */
 object Dedup {
 
-  /** Unpersist and drop the memoized shingle/candidate stages. Scopes the
-    * per-(session, sfDir) persists to a dedup run: call when the run ends
-    * in a long-lived session (and between bench timings so no query rides
-    * on another's cached stages). One-run-per-JVM harness processes never
-    * need it. NOTE this clears EVERY session's memos (the global sweep a
-    * bench wants); a multi-session server should use the session-scoped
-    * overload so one tenant's end-of-run doesn't unpersist another's
-    * stages mid-query.
-    *
-    * Eviction is atomic per key — remove(k) then unpersist the removed
-    * value — so a concurrent getOrElseUpdate can never have its freshly
-    * persisted frame dropped from the map WITHOUT being unpersisted (the
-    * old values-sweep-then-clear() left exactly that orphan: persisted
-    * blocks with no remaining handle). A frame inserted after its key was
-    * removed simply survives until the next clear. */
-  def clearCaches(): Unit =
-    dedupCaches.foreach(m => m.keys.foreach(k =>
-      m.remove(k).foreach(_.unpersist(blocking = false))))
+  /** Release every session's memoized dedup stages. perfbench's
+    * `OpsWorkload.clearResidue` is its only caller, and it goes with the
+    * next benchmark change; teardown is [[graft.SessionMemo.clear]]. */
+  def clearCaches(): Unit = SessionMemo.sweep("Dedup", None)
 
-  /** Evict only `session`'s memo entries — the long-lived-JVM seam: the
-    * caches key by (SparkSession, dir) and nothing fires on session stop
-    * (Spark has no per-session stop event), so a server creating a
-    * session per job must call this when the job ends or the maps grow
-    * one pinned entry per (session, dir) forever. */
-  def clearCaches(session: SparkSession): Unit =
-    dedupCaches.foreach(m => m.keys.filter(_._1 eq session).foreach(k =>
-      m.remove(k).foreach(_.unpersist(blocking = false))))
-
-  private[graft] def dedupCaches = Seq(
-    shingleCache, pairsCache, simhashCache, simhash64Cache, minhashSigCache)
+  private def sweptFrames = SessionMemo[String, DataFrame](
+    "Dedup", SessionMemo.Swept, SessionMemo.unpersist)
 
   /** documents ∪ mutated copies (first word replaced). */
   private def textCorpus(s: SparkSession, d: String): DataFrame = {
@@ -81,8 +58,7 @@ object Dedup {
     * explode+distinct per consumer would multiply the dominant shuffle.
     * (The at-scale equivalent: materialize the shingle table once per
     * dedup run.) */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val shingleCache = sweptFrames
 
   /** Raw exploded shingle stream over any (doc_id, text) corpus — NOT
     * distinct, NOT persisted. Feeds the signature aggregation, where `min`
@@ -105,7 +81,7 @@ object Dedup {
     shinglesOf(textCorpus(s, d))
 
   private def shingles(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d),
+    shingleCache.getOrElseUpdate(s, d,
       shingleStream(s, d)
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -395,12 +371,11 @@ object Dedup {
 
   /** Full banding pipeline, memoized: the candidate set is consumed by both
     * the minhash query and the Jaccard verifier. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pairsCache = sweptFrames
 
   /** ONE persisted copy of the corpus MinHash signature table per
-    * (session, dir) — the same lifecycle as [[shingleCache]] (registered
-    * in [[dedupCaches]], cleared between bench timings). Why (r12):
+    * (session, dir) — the same lifecycle as [[shingleCache]] (swept
+    * between bench timings). Why (r12):
     * [[candidatePairs]] consumes its band table TWICE (bucket-size gate +
     * the collect join-back); the exchanges are reused, but the per-shingle
     * md5 KERNEL above them re-ran once per consumer — two ~18 s task-time
@@ -410,16 +385,15 @@ object Dedup {
     * previously carried private copies of exactly this persist; they ride
     * the memo now (one build per run instead of one per query in a Verify
     * session). */
-  private val minhashSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val minhashSigCache = sweptFrames
 
   private def cachedSignatures(s: SparkSession, d: String): DataFrame =
-    minhashSigCache.getOrElseUpdate((s, d),
+    minhashSigCache.getOrElseUpdate(s, d,
       signaturesOf(textCorpus(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, d),
+    pairsCache.getOrElseUpdate(s, d,
       // signatures come from the row-local minhash8 kernel: the whole
       // candidate chain up to the band groupBy is a single scan — no
       // shingle explode, no signature aggregate shuffle
@@ -461,11 +435,10 @@ object Dedup {
 
   /** Per-doc 16-bit simhash signatures, persisted + memoized per
     * (session, sfDir): consumed twice by the bucket-count join-back. */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val simhashCache = sweptFrames
 
   private def simhashSigs(s: SparkSession, d: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, d), {
+    simhashCache.getOrElseUpdate(s, d, {
       graft.functions.TextStats.register(s)
       // one codegen'd row-local pass: md5 ONCE per distinct word, ±count
       // per digest nibble (TextStatKernels.simhash16 — integer-exact equal
@@ -506,11 +479,10 @@ object Dedup {
     * point), persisted + memoized per (session, sfDir) like the 16-bit
     * table. Same kernel family: nibbles 0-31 from md5(word), 32-63 from
     * md5('x1:' || word), ±multiplicity per distinct word. */
-  private val simhash64Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val simhash64Cache = sweptFrames
 
   private def simhash64Sigs(s: SparkSession, d: String): DataFrame =
-    simhash64Cache.getOrElseUpdate((s, d), {
+    simhash64Cache.getOrElseUpdate(s, d, {
       graft.functions.TextStats.register(s)
       FanOut(textCorpus(s, d), col("doc_id"))
         .select(col("doc_id"),
@@ -841,7 +813,7 @@ object Dedup {
           round(abs(matches / lit(8.0) - col("jaccard")), 4).as("abs_err"))
         .orderBy("a", "b")
         .localCheckpoint(true)
-      // no unpersist: sig is the session memo, released by clearCaches
+      // no unpersist: sig is the session memo, swept by SessionMemo
       out
     }),
 
@@ -1002,7 +974,7 @@ object Dedup {
             .as("recall"))
         .orderBy("threshold")
         .localCheckpoint(true)
-      // no unpersist: sig is the session memo, released by clearCaches
+      // no unpersist: sig is the session memo, swept by SessionMemo
       out
     }),
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.Q
 
 /** Graph analytics over relationship tables — the joins-and-aggregates
@@ -55,48 +55,32 @@ object Graph {
     * memo, q_recommend, q_recommend_probe, and q_copurchase_sim each
     * persisted their own copy with no in-query unpersist possible (the
     * returned plans are lazy), so a multi-query session pinned the same
-    * data three times (review finding). Cleared by [[clearCaches]], which
-    * Harness.clearResidue calls between timed runs — so
+    * data three times (review finding). Swept between timed runs, so
     * per-query bench numbers still pay the build. */
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val edgeCache = SessionMemo[String, org.apache.spark.sql.DataFrame](
+    "Graph", SessionMemo.Swept, SessionMemo.unpersist)
 
   /** ONE persisted copy of the top-20 item-CF similarity matrix per
     * (session, dir) — q_recommend and q_recommend_probe both consume the
     * identical [[itemSims]] build (the single most expensive shared stage
     * in the graph family, ~6 s at sf0.1), so a Verify session used to pay
-    * it twice (r10 verdict task). Same lifecycle as [[edgeCache]]: evicted
-    * + unpersisted by [[clearCaches]], which Harness.clearResidue calls
-    * between timed runs so per-query numbers still pay the build. */
-  private val simsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+    * it twice (r10 verdict task). Same lifecycle as [[edgeCache]]. */
+  private val simsCache = SessionMemo[String, org.apache.spark.sql.DataFrame](
+    "Graph", SessionMemo.Swept, SessionMemo.unpersist)
 
   private def cachedPairs(s: SparkSession, d: String) =
-    edgeCache.getOrElseUpdate((s, d), custSuppPairs(s, d)
+    edgeCache.getOrElseUpdate(s, d, custSuppPairs(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def cachedSims(s: SparkSession, d: String) =
-    simsCache.getOrElseUpdate((s, d), itemSims(cachedPairs(s, d))
+    simsCache.getOrElseUpdate(s, d, itemSims(cachedPairs(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private def graphCaches = Seq(edgeCache, simsCache)
-
-  /** Drop and UNPERSIST every session's memoized edge list + sims matrix
-    * (the global sweep a single-session bench wants). Eviction is atomic
-    * per key — remove then unpersist the removed value — the same
-    * orphan-proof order Dedup.clearCaches uses. */
-  def clearCaches(): Unit =
-    graphCaches.foreach(m => m.keys.foreach(k =>
-      m.remove(k).foreach(_.unpersist(blocking = false))))
-
-  /** Evict only `session`'s memo entries (the long-lived-JVM seam,
-    * matching Curation/Dedup's session-scoped contract): a server creating
-    * a session per job calls this at job end, and one tenant's
-    * end-of-run no longer discards another live session's memo or leaks
-    * entries for stopped sessions (review finding). */
-  def clearCaches(session: SparkSession): Unit =
-    graphCaches.foreach(m => m.keys.filter(_._1 eq session).foreach(k =>
-      m.remove(k).foreach(_.unpersist(blocking = false))))
+  /** Release every session's memoized edge list and sims matrix.
+    * perfbench's `OpsWorkload.clearResidue` is its only caller, and it
+    * goes with the next benchmark change; teardown is
+    * [[graft.SessionMemo.clear]]. */
+  def clearCaches(): Unit = SessionMemo.sweep("Graph", None)
 
   /** A (hi, lo) key pair packed into ONE long, `hi·2³² + lo`, for a
     * pair exchange. Injective only for keys in [0, 2³¹), so a key outside
@@ -402,7 +386,7 @@ object Graph {
         // the probe's sort-merge join reads the matrix side without a
         // per-probe sort — the shape ScaleRehearsal's recommend_serve
         // already used (the two copies had drifted; review finding)
-        simsCache.get((s, d)).getOrElse(itemSims(e0))
+        simsCache.get(s, d).getOrElse(itemSims(e0))
           .write.mode("overwrite").bucketBy(8, "s1").sortBy("s1")
           .option("path", s"$wh/sims").saveAsTable(idxTbl)
         val batch = e0.filter(pmod(col("c"), lit(37L)) === 5)

@@ -6,7 +6,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.Q
 
 /** Approximate-nearest-neighbor search over the embedding column
@@ -33,46 +33,33 @@ object Similarity {
     * few KB) — deliberately NOT executor storage, so blanket cache sweeps
     * (unpersist-all) cannot corrupt it and rebuilding the 16-row frame per
     * call is a LocalTableScan. */
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Array[Float])]]
-
-  /** Drop memoized KMeans centroids (bench/test isolation hook, mirroring
-    * Dedup.clearCaches). */
-  def clearCaches(): Unit = centroidCache.clear()
-
-  /** Session-scoped eviction (values are driver-side centroid arrays —
-    * only the map entry pinning a stopped session needs dropping). Also
-    * drains the session's persist ledger. */
-  def clearCaches(session: SparkSession): Unit = {
-    centroidCache.keys.filter(_._1 eq session).foreach(centroidCache.remove)
-    clearPersists(session)
-  }
+  private val centroidCache = SessionMemo[String, Seq[(Long, Array[Float])]](
+    "Similarity", SessionMemo.FittedModel, SessionMemo.noRelease)
 
   /** Per-session ledger of MEMORY_AND_DISK persists pinned by returned
-    * lazy plans ([[embeddingNearDup]]'s signature stage) — without it
-    * every public call pinned another cache entry until a session-wide
-    * catalog sweep, the same per-call leak pattern the Curation bloom
-    * ledger closed (review finding). Drained by [[clearPersists]] /
-    * [[clearCaches]](session); unpersist is idempotent, so a blanket
+    * lazy plans ([[embeddingNearDup]]'s signature stage), one entry per
+    * persist under a fresh id — without it every public call pinned
+    * another cache entry until a session-wide catalog sweep, the same
+    * per-call leak pattern the Curation bloom ledger closed (review
+    * finding). Unpersist is idempotent, so a blanket
     * `spark.catalog.clearCache()` having already dropped the blocks is
-    * fine — the drain then just releases the driver-side references. */
-  private val persistLedger = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, List[DataFrame]]
+    * fine — the release then just drops the driver-side references. */
+  private val persistLedger = SessionMemo[Long, DataFrame](
+    "Similarity", SessionMemo.Swept, SessionMemo.unpersist)
+  private val persistIds = new java.util.concurrent.atomic.AtomicLong
 
   private def trackPersist(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persistLedger.updateWith(p.sparkSession) {
-      cur => Some(p :: cur.getOrElse(Nil)) }
+    persistLedger.put(p.sparkSession, persistIds.incrementAndGet(), p)
     p
   }
 
-  /** Unpersist and drop every ledgered persist for `session`. Separate
-    * from [[clearCaches]]() on purpose: Harness.clearResidue must release
-    * per-call persists WITHOUT evicting the memoized KMeans centroids
-    * (q_ann_ivf_kmeans's deterministic fit-once steady state). */
+  /** Unpersist every ledgered persist for `session`, keeping the KMeans
+    * centroids. perfbench's `OpsWorkload.clearResidue` is its only caller,
+    * and it goes with the next benchmark change; teardown is
+    * [[graft.SessionMemo.clear]]. */
   def clearPersists(session: SparkSession): Unit =
-    persistLedger.remove(session).getOrElse(Nil)
-      .foreach(_.unpersist(blocking = false))
+    SessionMemo.sweep("Similarity", Some(session))
 
   /** Fill the (session, dir) KMeans codebook memo from a cold start,
     * mirroring q_ann_ivf_kmeans's fit context (normed corpus persisted for
@@ -215,7 +202,7 @@ object Similarity {
     * is the published practice (fit on a sample, assign everything). */
   private[ops] def fittedCentroids(s: SparkSession, d: String,
       n: DataFrame): Seq[(Long, Array[Float])] =
-    centroidCache.getOrElseUpdate((s, d), fitCentroidsOn(n, 16))
+    centroidCache.getOrElseUpdate(s, d, fitCentroidsOn(n, 16))
 
   /** The k-means fit core: `n` in the [[normed]] (embedding, nrm) shape.
     * Spherical fit (vectors pre-divided by their norm) with a fixed seed.
@@ -318,8 +305,8 @@ object Similarity {
     // per-element signature folds — the dominant per-row cost) would
     // otherwise recompute the whole scan+norm+signature pipeline from
     // lineage (review finding). The cache lives as long as the returned
-    // lazy plan; Spark evicts LRU, and the ledger drain (clearPersists /
-    // Harness.clearResidue) or spark.catalog.clearCache releases it
+    // lazy plan; Spark evicts LRU, and the ledger's sweep
+    // (Harness.clearResidue) or spark.catalog.clearCache releases it
     // explicitly — without the ledger every call leaked one entry.
     // nullif: a zero-norm vector must yield a NULL cosine (excluded by
     // the >= filter) in BOTH engines, not an ANSI DIVIDE_BY_ZERO crash.

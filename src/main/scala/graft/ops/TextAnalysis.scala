@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.Q
 
 /** Text analysis for LLM training-data pipelines (builder-prompt mandate):
@@ -755,9 +755,8 @@ object TextAnalysis {
     * the BPE working set. ONE persisted copy per (session, dir), shared by
     * the trainer ([[bpeMerges]]) and the applier (q_bpe_apply), which
     * previously each rebuilt it with their own documents scan + explode +
-    * groupBy(w). Cleared (with unpersist) by [[clearCaches]], which
-    * Harness.clearResidue calls between timed runs — each bench timing
-    * still pays one full build. */
+    * groupBy(w). Swept (with unpersist) between timed runs — each bench
+    * timing still pays one full build. */
   private def bpeCharVocab(s: SparkSession, d: String) =
     Tables.documents(s, d)
       .select(explode(expr(words)).as("w"))
@@ -766,40 +765,29 @@ object TextAnalysis {
       .select(col("c"),
         concat(lit("|"), regexp_replace(col("w"), "(.)", "$1|")).as("seq"))
 
-  private val vocabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val vocabCache = SessionMemo[String, org.apache.spark.sql.DataFrame](
+    "TextAnalysis", SessionMemo.Swept, SessionMemo.unpersist)
 
   private def cachedCharVocab(s: SparkSession, d: String) =
-    vocabCache.getOrElseUpdate((s, d), bpeCharVocab(s, d)
+    vocabCache.getOrElseUpdate(s, d, bpeCharVocab(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, String, String, String, Long)]]
+  private val bpeCache =
+    SessionMemo[String, Seq[(Int, String, String, String, Long)]](
+      "TextAnalysis", SessionMemo.Swept, SessionMemo.noRelease)
 
-  /** Drop memoized BPE merge tables and the persisted char vocabulary
-    * (test/bench isolation hook — the Similarity.centroidCache pattern;
-    * eviction is atomic per key: remove, then unpersist the removed
-    * value). */
-  def clearCaches(): Unit = {
-    bpeCache.clear()
-    vocabCache.keys.foreach(k =>
-      vocabCache.remove(k).foreach(_.unpersist(blocking = false)))
-  }
-
-  /** Session-scoped eviction (merge tables are driver-side Seqs — no
-    * unpersist needed; the vocab frame releases its executor blocks). */
-  def clearCaches(session: org.apache.spark.sql.SparkSession): Unit = {
-    bpeCache.keys.filter(_._1 eq session).foreach(bpeCache.remove)
-    vocabCache.keys.filter(_._1 eq session).foreach(k =>
-      vocabCache.remove(k).foreach(_.unpersist(blocking = false)))
-  }
+  /** Release every session's BPE merges and persisted char vocabulary.
+    * perfbench's `OpsWorkload.clearResidue` is its only caller, and it
+    * goes with the next benchmark change; teardown is
+    * [[graft.SessionMemo.clear]]. */
+  def clearCaches(): Unit = SessionMemo.sweep("TextAnalysis", None)
 
   /** The training loop behind q_bpe_train/q_bpe_apply, memoized per
     * (session, corpus): 5 greedy rounds, each one row-local pair explode +
     * one map-side-combined aggregate + a 1-row winning-pair collect. */
   private def bpeMerges(s: SparkSession, d: String)
       : Seq[(Int, String, String, String, Long)] =
-    bpeCache.getOrElseUpdate((s, d), {
+    bpeCache.getOrElseUpdate(s, d, {
       val wc = cachedCharVocab(s, d)
       var vocab: org.apache.spark.sql.DataFrame = wc
       val merges = Seq.newBuilder[(Int, String, String, String, Long)]
@@ -830,7 +818,7 @@ object TextAnalysis {
         }
       }
       // no unpersist: the vocab is the shared memo now (q_bpe_apply reads
-      // it right after training); clearCaches releases it
+      // it right after training); the sweep releases it
       merges.result()
     })
 

@@ -433,13 +433,13 @@ class ApiSpec extends SparkSpec {
 
   test("prewarmCodebook fills the KMeans memo from cold (Bench's " +
       "ann_codebook_fit meter)") {
-    ops.Similarity.clearCaches()
+    SessionMemo.clear(spark, SessionMemo.FittedModel)
     val k = ops.Similarity.prewarmCodebook(spark, sf)
     assert(k > 0 && k <= 16, s"expected 1..16 centroids, got $k")
     // the memo is now warm: a second call must not refit (same value,
     // and the memoized path returns without touching executor storage)
     assert(ops.Similarity.prewarmCodebook(spark, sf) == k)
-    ops.Similarity.clearCaches()
+    SessionMemo.clear(spark, SessionMemo.FittedModel)
   }
 
   test("itemSims fails loudly on a packed pair key outside [0, 2^31)") {

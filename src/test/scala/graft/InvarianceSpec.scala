@@ -95,8 +95,8 @@ class InvarianceSpec extends SparkSpec {
       for (qid <- qids) {
         val runs = Seq("3", "13", "32").map { n =>
           spark.conf.set("spark.sql.shuffle.partitions", n)
-          ops.Dedup.clearCaches() // no memoized plan may leak across configs
-          ops.TextAnalysis.clearCaches() // ditto for memoized BPE merges
+          // no memoized plan or BPE merges may leak across configs
+          SessionMemo.clear(spark, SessionMemo.Swept)
           SparkEntry.queries(qid)(spark, sf).collect().map(_.toString).toSeq
         }
         assert(runs(0) == runs(1) && runs(1) == runs(2),
@@ -134,8 +134,7 @@ class InvarianceSpec extends SparkSpec {
       for (qid <- aqeQids) {
         val runs = Seq("false", "true").map { on =>
           spark.conf.set("spark.sql.adaptive.enabled", on)
-          ops.Dedup.clearCaches()
-          ops.TextAnalysis.clearCaches()
+          SessionMemo.clear(spark, SessionMemo.Swept)
           SparkEntry.queries(qid)(spark, sf).collect().map(_.toString).toSeq
         }
         assert(runs(0) == runs(1), s"$qid changes results when AQE toggles")

@@ -48,11 +48,9 @@ class LayoutInvarianceSpec extends SparkSpec {
         try {
           // memoized artifacts (BPE merges, dedup indexes) are keyed per
           // corpus dir, but clear anyway so no plan state leaks across runs
-          ops.Dedup.clearCaches()
-          ops.TextAnalysis.clearCaches()
+          SessionMemo.clear(spark, SessionMemo.Swept)
           val base = fn(spark, sf).collect().map(_.toString).toSeq
-          ops.Dedup.clearCaches()
-          ops.TextAnalysis.clearCaches()
+          SessionMemo.clear(spark, SessionMemo.Swept)
           val multi = fn(spark, multiFileSf).collect().map(_.toString).toSeq
           if (base == multi) None
           else {

@@ -1490,25 +1490,61 @@ class OpsSpec extends SparkSpec {
 
   test("memo caches: session-scoped eviction is surgical, global clear is " +
       "atomic per key (r9 review)") {
-    import graft.ops.Dedup
-    Dedup.clearCaches()
     val s2 = spark.newSession()
-    // fill the simhash memo in two sessions over the same corpus
-    SparkEntry.queries("q_dedup_simhash")(spark, sf)
-      .queryExecution.toRdd.count()
-    SparkEntry.queries("q_dedup_simhash")(s2, sf)
-      .queryExecution.toRdd.count()
-    def sessionsCached: Set[Boolean] = Dedup.dedupCaches
-      .flatMap(_.keys.map(_._1)).toSet
-      .map((s: org.apache.spark.sql.SparkSession) => s eq s2)
-    assert(sessionsCached == Set(true, false),
-      "both sessions must hold memo entries before eviction")
-    // evicting s2 must not touch the primary session's entries
-    Dedup.clearCaches(s2)
-    assert(sessionsCached == Set(false),
+    // fill a Dedup memo, a TextAnalysis memo and reader frames in two
+    // sessions over the same corpus
+    for (s <- Seq(spark, s2); q <- Seq("q_dedup_simhash", "q_bpe_train"))
+      SparkEntry.queries(q)(s, sf).queryExecution.toRdd.count()
+    def owners(s: org.apache.spark.sql.SparkSession) =
+      SessionMemo.entries(s).map(_._1).toSet
+    val filled = Set("Dedup", "TextAnalysis", "Tables")
+    for (s <- Seq(spark, s2))
+      assert(filled.subsetOf(owners(s)), s"memos not filled: ${owners(s)}")
+    // a module's global sweep empties its entries in every session, and
+    // only its own
+    ops.Dedup.clearCaches()
+    for (s <- Seq(spark, s2))
+      assert(!owners(s).contains("Dedup") &&
+        (filled - "Dedup").subsetOf(owners(s)), owners(s))
+    // evicting s2 empties every scope for s2, reader frames included,
+    // and must not touch the primary session's entries
+    SessionMemo.clear(s2)
+    assert(SessionMemo.entries(s2).isEmpty)
+    assert((filled - "Dedup").subsetOf(owners(spark)),
       "session-scoped eviction must leave other sessions' memos intact")
-    // and the global sweep empties everything
-    Dedup.clearCaches()
-    assert(Dedup.dedupCaches.forall(_.isEmpty))
+    SessionMemo.clear(spark, SessionMemo.Swept)
+    assert(SessionMemo.entries(spark).forall(_._2 != SessionMemo.Swept))
+    assert(owners(spark).contains("Tables"))
+  }
+
+  test("no memo keyed on SparkSession lives outside SessionMemo") {
+    // a TrieMap/WeakHashMap whose first type argument (the key) names
+    // SparkSession, in any main source but the registry itself
+    import scala.jdk.CollectionConverters._
+    val opener = raw"\b(?:TrieMap|WeakHashMap)\s*(?:\.\s*empty\s*)?\[".r
+    def keyType(src: String, open: Int): String = {
+      var depth = 0
+      var i = open
+      while (!(depth == 1 && (src(i) == ',' || src(i) == ']'))) {
+        if (src(i) == '[' || src(i) == '(') depth += 1
+        if (src(i) == ']' || src(i) == ')') depth -= 1
+        i += 1
+      }
+      src.substring(open + 1, i)
+    }
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root))
+    val sources = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+        _.iterator().asScala.toList)
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "SessionMemo.scala")
+    val strays = sources.flatMap { p =>
+      val src = java.nio.file.Files.readString(p)
+      opener.findAllMatchIn(src)
+        .filter(m => keyType(src, m.end - 1).contains("SparkSession"))
+        .map(m => s"$p: ${src.substring(m.start, m.end)}")
+    }
+    assert(sources.nonEmpty)
+    assert(strays.isEmpty, s"declare these with SessionMemo: $strays")
   }
 }

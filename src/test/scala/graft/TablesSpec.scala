@@ -86,12 +86,20 @@ class TablesSpec extends SparkSpec {
     spark.table("graft_residue_probe").count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     assert(spark.catalog.isCached("graft_residue_probe"))
+    // a swept memo (the persisted simhash signatures) and a fitted model
+    SparkEntry.queries("q_dedup_simhash")(spark, sf).queryExecution.toRdd.count()
+    ops.Similarity.prewarmCodebook(spark, sf)
+    def scopes = SessionMemo.entries(spark).map(_._2).toSet
+    assert(scopes.contains(SessionMemo.Swept))
     try {
       Harness.clearResidue(spark)
       assert(spark.sparkContext.getPersistentRDDs.isEmpty)
       assert(!spark.catalog.isCached("graft_residue_probe"))
-      // reader metadata is a declared keep: the same frame object
+      assert(!scopes.contains(SessionMemo.Swept), "swept memos must go")
+      // reader metadata and the KMeans codebook are declared keeps
       assert(Tables.lineitem(spark, sf) eq li)
+      assert(SessionMemo.entries(spark)
+        .contains("Similarity" -> SessionMemo.FittedModel))
     } finally spark.catalog.dropTempView("graft_residue_probe")
   }
 }
