@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.{FakeLlm, GraftConfig, GraftSession, Shortcuts}
 
 /** Usage example: the conversational engine over the driver's test tables.
@@ -9,12 +8,7 @@ import graft.engine.{FakeLlm, GraftConfig, GraftSession, Shortcuts}
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(defaultCpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val llm = FakeLlm(

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The measurement mains' one copy of bench hygiene: the session Bench,
-  * Profile, ScaleRehearsal and Explain build, and the warm-up, residue
-  * clear and min-of-2 timing they share — so a fix to any of them (a memo
-  * clear, a session conf) reaches every tool at once. */
+/** The mains' one copy of bench hygiene: the session every main builds
+  * (Bench, Profile, ScaleRehearsal, Explain, Verify, Smoke, Demo), and the
+  * warm-up, residue clear and min-of-2 timing the measurement mains share
+  * — so a fix to any of them (a memo clear, a session conf) reaches every
+  * tool at once. */
 object Harness {
 
   /** The bench session: `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`)

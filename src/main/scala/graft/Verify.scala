@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -32,19 +31,10 @@ object Verify {
     // Optional extra args: qids to dump (default all). The driver always
     // calls with exactly two args; the filter is for fast local iteration.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts layout (NANOS vs MICROS) is dispatched per-footer by
-      // Tables.events; the legacy nanosAsLong conf turns on there on demand.
-      // Write LTZ timestamps as INT64 micros (not INT96) so the driver's
-      // DuckDB-side read sees the same values it computes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 4)
+    // Write LTZ timestamps as INT64 micros (not INT96) so the driver's
+    // DuckDB-side read sees the same values it computes.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -281,12 +281,11 @@ final class GraftSession(
     loop(firstSql, 0)
   }
 
-  /** Guard → bind → analyze: parse `sql` once, validate the unbound plan,
-    * bind the frames into it (no catalog views) and analyze it. Left is the
-    * guard's reason or the analysis error. */
+  /** The plan the guard checked, with the frames bound into it (no catalog
+    * views), analyzed. Left is the guard's reason or the analysis error. */
   private def guarded(sql: String, frames: Seq[(String, DataFrame)]): Either[String, DataFrame] =
-    SqlGuard.accept(spark, sql, frames.map(_._1).toSet, config.functionAllowlist)
-      .flatMap(plan => caught(GraftDataset.ofRows(spark, SqlGuard.bind(plan, frames))))
+    SqlGuard.accept(spark, sql, frames, config.functionAllowlist)
+      .flatMap(plan => caught(GraftDataset.ofRows(spark, plan)))
 
   private def caught[A](body: => A): Either[String, A] =
     try Right(body) catch { case e: Exception => Left(String.valueOf(e.getMessage)) }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.graftshim.GraftDataset
   * GenerateResponse, the reference's prompts package) with the codegen target
   * switched from arbitrary Python to Spark SQL: the safe analog of the
   * reference's AST import-whitelist is parsing to a LogicalPlan and
-  * validating it (SqlGuard). Every template is overridable via
-  * GraftConfig.customPrompts, like the reference's `non_default_prompts`
-  * (polarsai/__init__.py:90,148-150). Schema reaches the model exactly the
+  * validating it (SqlGuard). The generation prompt is overridable via
+  * GraftConfig.customPrompts (key [[GenerateSqlKey]]), like the reference's
+  * `non_default_prompts` (polarsai/__init__.py:90,148-150); the correction
+  * and rephrase templates are not. Schema reaches the model exactly the
   * way the reference does it: a stringified head + shape per table
   * (polarsai/__init__.py:278-287) — text, not a programmatic schema channel.
   */
@@ -25,24 +26,18 @@ object Prompts {
     def rowsText: String = if (rows >= 0) rows.toString else "an unknown number of"
   }
 
-  /** Row count for the prompt. The reference embeds exact df.shape — O(1)
-    * in polars; here it costs at most one Spark job, and none when the
-    * rows are already on the driver:
-    *  - a frame whose optimized plan is a `LocalRelation` (a
-    *    `createDataFrame` frame, also after filters and projections the
-    *    optimizer folds into it) returns its row array's length, in both
-    *    modes;
-    *  - `exact = true` (reference parity) counts any other frame over its
+  /** Row count for the prompt of a frame whose rows are not on the driver
+    * (`describe` reads a driver-local frame's count itself). The reference
+    * embeds exact df.shape — O(1) in polars; here it costs at most one
+    * Spark job:
+    *  - `exact = true` (reference parity) counts the frame over its
     *    column-pruned plan as one SQL execution (`GraftDataset.count`):
     *    one job with no exchange for a scan, no column read;
     *  - `exact = false` takes Catalyst's stats estimate when the optimizer
     *    has one (free), else -1 ("unknown") rather than scanning. */
   def rowCount(df: DataFrame, exact: Boolean): Long =
-    df.queryExecution.optimizedPlan match {
-      case local: LocalRelation => local.data.length.toLong
-      case _ if exact => GraftDataset.count(df)
-      case plan => plan.stats.rowCount.map(_.longValue).getOrElse(-1L)
-    }
+    if (exact) GraftDataset.count(df)
+    else df.queryExecution.optimizedPlan.stats.rowCount.map(_.longValue).getOrElse(-1L)
 
   /** Render schema + first rows as text (the prompt's only schema channel).
     * Collect is bounded to `n` rows — never a full materialization.
@@ -53,12 +48,14 @@ object Prompts {
     * deterministic type-shaped placeholders, so the model still sees shape
     * and dtypes but no data leaves the cluster in prompts.
     *
-    * Costs at most two Spark jobs: one for the row count (see `rowCount`;
-    * none for a driver-local frame or an estimate) and one for the head
-    * collect (none for a driver-local frame). The count reads no column,
-    * so it is kept apart from the head rather than folded into one
-    * all-columns pass. GraftSession calls it once per frame object per
-    * session and reuses the result. */
+    * A driver-local frame (optimized plan a `LocalRelation`) is read from
+    * its row array: its length, and the head decoded as `collect` would,
+    * with no SQL execution. Any other frame costs at most two Spark jobs:
+    * one for the head collect and one for the row count (see `rowCount`;
+    * none for an estimate). The count reads no column, so it is kept apart
+    * from the head rather than folded into one all-columns pass.
+    * GraftSession calls it once per frame object per session and reuses
+    * the result. */
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
     val header = schemaHeader(df)
@@ -70,13 +67,20 @@ object Prompts {
       case _: Boolean => (rowIdx % 2 == 0).toString
       case other => s"${other.getClass.getSimpleName.toLowerCase}_$rowIdx"
     }
-    val rows = df.limit(n).collect().zipWithIndex.map { case (r, i) =>
+    val (head, count) = df.queryExecution.optimizedPlan match {
+      // a `createDataFrame` frame, also after filters and projections the
+      // optimizer folds into it: exact in both count modes, at no cost
+      case local: LocalRelation =>
+        (GraftDataset.localHead(df, local, n), local.data.length.toLong)
+      case _ => (df.limit(n).collect(), rowCount(df, exactRowCount))
+    }
+    val rows = head.zipWithIndex.map { case (r, i) =>
       r.toSeq.map { v =>
         if (anonymize) mask(v, i)
         else if (v == null) "null" else v.toString
       }.mkString(" | ")
     }
-    TableCtx(name, rowCount(df, exactRowCount), df.schema.fields.length,
+    TableCtx(name, count, df.schema.fields.length,
       (header +: rows).mkString("\n"))
   }
 
@@ -92,9 +96,8 @@ object Prompts {
       s"Table `${t.name}`, with ${t.rowsText} rows and ${t.cols} columns. " +
         s"Schema and first rows:\n${t.head}").mkString("\n\n")
 
+  /** The `GraftConfig.customPrompts` key of the generation prompt. */
   val GenerateSqlKey = "generate_sql"
-  val CorrectErrorKey = "correct_error"
-  val GenerateResponseKey = "generate_response"
 
   /** Analog of GeneratePythonCodePrompt/MultipleDataframesPrompt (injects
     * today's date like generate_python_code.py:33). */

@@ -1,8 +1,10 @@
 package graft.engine
 
+import scala.util.control.NoStackTrace
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedGenerator, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedGenerator, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression, UnresolvedNamedLambdaVariable, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, SubqueryAlias, UnresolvedWith, WithWindowDefinition}
 
 /** Pre-execution SQL validation — SURVEY.md §2.1 `_clean_code` /
@@ -19,6 +21,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, Subque
   * `__builtins__` whitelist, SURVEY §7.5.8) is applied on top, with an
   * optional caller-supplied function allowlist mirroring the reference's
   * whitelist philosophy (/root/reference/polarsai/constants.py:69-83).
+  *
+  * One walk checks the plan and returns it bound: each relation naming a
+  * caller's frame becomes that frame's analyzed plan, so the plan that runs
+  * is the plan that was checked ([[accept]]); [[check]] is the same walk
+  * with no frame to bind.
   */
 object SqlGuard {
 
@@ -216,7 +223,25 @@ object SqlGuard {
         Left("parser stack overflow: query too deeply nested")
     }
 
-  /** Validate a parsed plan against the registered view names.
+  /** The plan `sql` parses to, checked, with each relation naming a frame
+    * replaced by that frame's analyzed plan — or why it is refused. The
+    * walk does not enter a frame's plan: it is the caller's, not generated,
+    * and holds nodes outside the allowlist. */
+  def accept(spark: SparkSession, sql: String, frames: Seq[(String, DataFrame)],
+      functionAllowlist: Option[Set[String]] = None): Either[String, LogicalPlan] =
+    guard(spark, sql, frames, Set.empty, functionAllowlist)
+
+  /** The same walk with no frame to bind: Ok if `sql` reads only
+    * `allowedViews` (and its own CTEs) under the function rules. */
+  def check(spark: SparkSession, sql: String, allowedViews: Set[String],
+      functionAllowlist: Option[Set[String]] = None): Verdict =
+    guard(spark, sql, Nil, allowedViews, functionAllowlist).fold(Rejected(_), _ => Ok)
+
+  /** Thrown inside the walk, caught at its root. */
+  private final class Refused(val reason: String) extends Exception with NoStackTrace
+  private def refuse(reason: String): Nothing = throw new Refused(reason)
+
+  /** Parse `sql`, check the plan and bind `frames` into it, in one walk.
     *
     * The walk is SCOPE-AWARE on CTE names (r9 review finding): a name
     * defined by `WITH x AS (...)` is a legal relation target only INSIDE
@@ -225,28 +250,61 @@ object SqlGuard {
     * anywhere in the query legalized reading a real catalog table named
     * `secrets` from an unrelated branch. Scoping is the standard prefix
     * rule (a definition body sees the outer scope plus the definitions
-    * BEFORE it; the main query sees them all) — an under-approximation
-    * that fails closed on anything more exotic. Subquery plans inside
-    * expressions — including expressions held by named WINDOW definitions,
-    * the Map both QueryPlan.expressions and collectWithSubqueries skip
-    * (r8 function bypass; r9 fuzz-found plan bypass) — are walked with
-    * the scope of the node that holds them.
+    * BEFORE it, and itself too under WITH RECURSIVE; the main query sees
+    * them all) — an under-approximation that fails closed on anything more
+    * exotic. Subquery plans inside expressions — including expressions
+    * held by named WINDOW definitions, the Map both QueryPlan.expressions
+    * and collectWithSubqueries skip (r8 function bypass; r9 fuzz-found
+    * plan bypass) — are walked with the scope of the node that holds them.
+    *
+    * A relation name means, in this order: a CTE visible at that point; a
+    * frame, bound as `SubqueryAlias(name, frame plan)`; a view of
+    * `views`, left unbound; else the plan is refused.
     *
     * @param functionAllowlist when set, ONLY these function names may be
     *   called (the reference's whitelist mode); the env-leak denylist still
     *   applies on top, so allowlisting `current_user` does not re-enable it.
     */
-  def validate(plan: LogicalPlan, allowedViews: Set[String],
-      functionAllowlist: Option[Set[String]] = None): Verdict = {
+  private def guard(spark: SparkSession, sql: String,
+      frames: Seq[(String, DataFrame)], views: Set[String],
+      functionAllowlist: Option[Set[String]]): Either[String, LogicalPlan] = {
     val wlLower = functionAllowlist.map(_.map(_.toLowerCase))
+    val byName = frames.map { case (n, df) => n.toLowerCase -> (n, df) }.toMap
+    val viewsLower = views.map(_.toLowerCase)
 
-    def walk(p: LogicalPlan, scope: Set[String]): Option[Rejected] = {
+    def checkFnName(n: String): Unit =
+      if (bannedFunctions.contains(n)) refuse(s"function not allowed: $n")
+      else wlLower.foreach { wl =>
+        if (!wl.contains(n)) refuse(s"function not in allowlist: $n")
+      }
+    // shared by UnresolvedAttribute AND UnresolvedNamedLambdaVariable:
+    // inside a lambda body the parser wraps EVERY attribute (not just
+    // the lambda's own arguments) as a lambda variable, and the
+    // analyzer rewrites unmatched ones back to plain attributes — so a
+    // bare identity keyword or a variable-namespace reference inside
+    // `transform(arr, x -> ...)` resolves exactly like the top-level
+    // form (r12 fuzz find: the lambda wrapping skipped both checks)
+    def checkAttrParts(parts: Seq[String]): Unit =
+      if (parts.length == 1 &&
+          bareLiteralFunctions.contains(parts.head.toLowerCase))
+        refuse(
+          s"bare identity keyword not allowed: ${parts.head.toLowerCase} " +
+            "(resolves to the function when no such column exists; " +
+            "alias the column if one does)")
+      else if (isVariableNamespace(parts))
+        refuse(
+          s"session-variable namespace not allowed: " +
+            s"${parts.mkString(".")} " +
+            "(resolves to a SQL session variable when no such column " +
+            "exists; qualify the column with its table/alias if one does)")
+
+    def walk(p: LogicalPlan, ctes: Set[String]): LogicalPlan = {
       // Fail-closed node allowlist: Command subclasses, DDL/DML, EXECUTE
       // IMMEDIATE, and any statement kind we have not audited land here.
       if (p.isInstanceOf[Command])
-        return Some(Rejected(s"command node not allowed: ${p.nodeName}"))
+        refuse(s"command node not allowed: ${p.nodeName}")
       if (!allowedNodes.contains(p.nodeName))
-        return Some(Rejected(s"statement not allowed: ${p.nodeName}"))
+        refuse(s"statement not allowed: ${p.nodeName}")
 
       // Row-generating TVFs only; no metadata/catalog TVFs.
       if (p.nodeName == "UnresolvedTableValuedFunction") {
@@ -256,39 +314,14 @@ object SqlGuard {
           case s: String => s.toLowerCase
         }.getOrElse("")
         if (!allowedTvfs.contains(name))
-          return Some(Rejected(s"table function not allowed: $name"))
+          refuse(s"table function not allowed: $name")
       }
 
-      p match {
-        case r: UnresolvedRelation =>
-          // STREAM(t) / STREAM t parses to the SAME UnresolvedRelation
-          // node with isStreaming=true (r12 fuzz find: the name-only
-          // check validated a streaming read of an allowed view) — the
-          // guard surface is batch analytics, so streaming reads fail
-          // closed regardless of the relation name
-          if (r.isStreaming)
-            return Some(Rejected("streaming relation not allowed: " +
-              r.multipartIdentifier.mkString(".")))
-          val name = r.multipartIdentifier.mkString(".").toLowerCase
-          if (!scope.contains(name))
-            return Some(Rejected(s"unknown table: $name " +
-              s"(allowed: ${scope.toSeq.sorted.mkString(", ")})"))
-        case _ => ()
-      }
-
-      // Function scan over this node's expressions, PLUS named WINDOW
-      // definitions (invisible to QueryPlan.expressions — the r8 bypass).
-      // LATERAL VIEW generators parse to UnresolvedGenerator, not
-      // UnresolvedFunction, so both are matched.
-      val exprRoots = p.expressions ++ (p match {
-        case w: WithWindowDefinition => w.windowDefinitions.values.toSeq
-        case _ => Nil
-      })
-      // ONE pre-order traversal of each expression tree serves all four
-      // scans (the checks are independent, so the first rejection in tree
-      // order wins — a multi-poison query may report a different ONE of
-      // its poisons than scan-type ordering would; the verdict is
-      // Rejected either way):
+      // ONE pre-order traversal of each expression tree serves every scan
+      // (the checks are independent, so the first rejection in tree order
+      // wins — a multi-poison query may report a different ONE of its
+      // poisons than scan-type ordering would; the verdict is Rejected
+      // either way):
       //  - deferred IDENTIFIER() (fuzz-found r10 bypass): the name lives
       //    in a string literal until analysis — no UnresolvedFunction
       //    exists to scan, and a deferred name cannot be checked
@@ -299,141 +332,74 @@ object SqlGuard {
       //    attribute named current_user/user/session_user as the nullary
       //    function; the guard has view NAMES but not schemas, so it
       //    cannot tell a real column from the fallback — fail closed;
-      //  - function/generator names against the denylist + allowlist;
-      //  - nested subquery plans (collected, walked after the scan).
-      var rejection: Option[Rejected] = None
-      val subPlans =
-        scala.collection.mutable.ListBuffer.empty[LogicalPlan]
-      def checkFnName(n: String): Unit = {
-        if (bannedFunctions.contains(n))
-          rejection = Some(Rejected(s"function not allowed: $n"))
-        else wlLower.foreach { wl =>
-          if (!wl.contains(n))
-            rejection = Some(Rejected(s"function not in allowlist: $n"))
-        }
+      //  - function/generator names against the denylist + allowlist.
+      //    LATERAL VIEW generators parse to UnresolvedGenerator, not
+      //    UnresolvedFunction, so both are matched;
+      //  - subquery PLANS (scalar subqueries, EXISTS, IN-lists, lateral),
+      //    walked and bound with THIS node's scope.
+      def expr(e: Expression): Expression = e.transformDown {
+        case d if d.nodeName == "ExpressionWithUnresolvedIdentifier" =>
+          refuse("deferred IDENTIFIER() not allowed: name not statically checkable")
+        case a: UnresolvedAttribute => checkAttrParts(a.nameParts); a
+        case lv: UnresolvedNamedLambdaVariable => checkAttrParts(lv.nameParts); lv
+        case f: UnresolvedFunction =>
+          checkFnName(f.nameParts.mkString(".").toLowerCase); f
+        case g: UnresolvedGenerator =>
+          checkFnName(g.name.unquotedString.toLowerCase); g
+        case pe: PlanExpression[LogicalPlan @unchecked] if pe.plan.isInstanceOf[LogicalPlan] =>
+          pe.withNewPlan(walk(pe.plan, ctes))
       }
-      // shared by UnresolvedAttribute AND UnresolvedNamedLambdaVariable:
-      // inside a lambda body the parser wraps EVERY attribute (not just
-      // the lambda's own arguments) as a lambda variable, and the
-      // analyzer rewrites unmatched ones back to plain attributes — so a
-      // bare identity keyword or a variable-namespace reference inside
-      // `transform(arr, x -> ...)` resolves exactly like the top-level
-      // form (r12 fuzz find: the lambda wrapping skipped both checks)
-      def checkAttrParts(parts: Seq[String]): Unit = {
-        if (parts.length == 1 &&
-            bareLiteralFunctions.contains(parts.head.toLowerCase))
-          rejection = Some(Rejected(
-            s"bare identity keyword not allowed: ${parts.head.toLowerCase} " +
-              "(resolves to the function when no such column exists; " +
-              "alias the column if one does)"))
-        else if (isVariableNamespace(parts))
-          rejection = Some(Rejected(
-            s"session-variable namespace not allowed: " +
-              s"${parts.mkString(".")} " +
-              "(resolves to a SQL session variable when no such column " +
-              "exists; qualify the column with its table/alias if one does)"))
-      }
-      exprRoots.foreach(_.foreach { e =>
-        if (rejection.isEmpty) e match {
-          case d if d.nodeName == "ExpressionWithUnresolvedIdentifier" =>
-            rejection = Some(Rejected(
-              "deferred IDENTIFIER() not allowed: name not statically checkable"))
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            checkAttrParts(a.nameParts)
-          case lv: org.apache.spark.sql.catalyst.expressions
-              .UnresolvedNamedLambdaVariable =>
-            checkAttrParts(lv.nameParts)
-          case f: UnresolvedFunction =>
-            checkFnName(f.nameParts.mkString(".").toLowerCase)
-          case g: UnresolvedGenerator =>
-            checkFnName(g.name.unquotedString.toLowerCase)
-          case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
-            pe.plan match {
-              case lp: LogicalPlan => subPlans += lp
-              case _ => ()
-            }
-          case _ => ()
-        }
-      })
-      rejection.foreach(r => return Some(r))
-      // Subquery PLANS inside those expressions (scalar subqueries,
-      // EXISTS, IN-lists, lateral) — walked with THIS node's scope.
-      for (sp <- subPlans; rej <- walk(sp, scope)) return Some(rej)
 
-      // Children: a WITH extends the scope — each definition body sees
-      // the outer scope plus the definitions before it, the main query
-      // sees them all. Everything else inherits the scope unchanged.
-      val childScope = p match {
-        case w: UnresolvedWith =>
-          var seen = scope
-          for ((n, body, _) <- w.cteRelations) {
-            for (rej <- walk(body, seen)) return Some(rej)
-            seen += n.toLowerCase
-          }
-          seen
-        case _ => scope
-      }
-      for (c <- p.children; rej <- walk(c, childScope)) return Some(rej)
-      None
-    }
-
-    // Same containment stance as parse(): fail-closed means fail CAUGHT.
-    // A plan deep enough to blow the walk's stack (it recurses per node
-    // and per subquery) must surface as a Rejected verdict, not escape
-    // check() as a JVM Error.
-    try walk(plan, allowedViews.map(_.toLowerCase)).getOrElse(Ok)
-    catch {
-      case _: StackOverflowError =>
-        Rejected("query too deeply nested to validate")
-    }
-  }
-
-  /** Bind each relation that names a frame to that frame's analyzed plan,
-    * under the scoping [[validate]] applies: a CTE of the same name shadows
-    * the frame inside its scope (a definition body sees the definitions
-    * before it, and itself too under WITH RECURSIVE), and the walk reaches
-    * every place validate does — children, subquery expressions, named
-    * WINDOW specs and CTE bodies. Bind only a plan validate accepted: the
-    * frame plans hold nodes outside the allowlist. */
-  def bind(plan: LogicalPlan, frames: Seq[(String, DataFrame)]): LogicalPlan = {
-    val byName = frames.map { case (n, df) => n.toLowerCase -> (n, df) }.toMap
-    def go(p: LogicalPlan, ctes: Set[String]): LogicalPlan = {
-      def sub(e: Expression): Expression =
-        e.transform { case s: SubqueryExpression => s.withNewPlan(go(s.plan, ctes)) }
       p match {
         case r: UnresolvedRelation =>
-          val n = r.multipartIdentifier.mkString(".").toLowerCase
-          byName.get(n).filterNot(_ => ctes(n))
-            .map { case (name, df) => SubqueryAlias(name, df.queryExecution.analyzed) }
-            .getOrElse(r)
+          // STREAM(t) / STREAM t parses to the SAME UnresolvedRelation
+          // node with isStreaming=true (r12 fuzz find: the name-only
+          // check validated a streaming read of an allowed view) — the
+          // guard surface is batch analytics, so streaming reads fail
+          // closed regardless of the relation name
+          if (r.isStreaming)
+            refuse("streaming relation not allowed: " +
+              r.multipartIdentifier.mkString("."))
+          val name = r.multipartIdentifier.mkString(".").toLowerCase
+          if (ctes(name)) r
+          else byName.get(name) match {
+            case Some((n, df)) => SubqueryAlias(n, df.queryExecution.analyzed)
+            case None if viewsLower(name) => r
+            case None =>
+              val scope = ctes ++ byName.keySet ++ viewsLower
+              refuse(s"unknown table: $name " +
+                s"(allowed: ${scope.toSeq.sorted.mkString(", ")})")
+          }
+        // Named WINDOW definitions are invisible to QueryPlan.expressions
+        // (the r8 bypass), so they are walked here.
+        case w: WithWindowDefinition =>
+          w.copy(windowDefinitions = w.windowDefinitions.map { case (k, v) =>
+            k -> expr(v).asInstanceOf[WindowSpecDefinition] },
+            child = walk(w.child, ctes))
+        // A WITH extends the scope: each definition body sees the outer
+        // scope plus the definitions before it, the main query sees them all.
         case w: UnresolvedWith =>
           var seen = ctes
           val defs = w.cteRelations.map { case (n, body, depth) =>
             val inBody = if (w.allowRecursion) seen + n.toLowerCase else seen
             seen += n.toLowerCase
-            (n, go(body, inBody).asInstanceOf[SubqueryAlias], depth)
+            (n, walk(body, inBody).asInstanceOf[SubqueryAlias], depth)
           }
-          w.copy(child = go(w.child, seen), cteRelations = defs)
-        case w: WithWindowDefinition =>
-          w.copy(child = go(w.child, ctes), windowDefinitions =
-            w.windowDefinitions.map { case (k, v) => k -> sub(v).asInstanceOf[WindowSpecDefinition] })
-        case _ => p.mapChildren(go(_, ctes)).mapExpressions(sub)
+          w.copy(child = walk(w.child, seen), cteRelations = defs)
+        case _ => p.mapExpressions(expr).mapChildren(walk(_, ctes))
       }
     }
-    go(plan, Set.empty)
-  }
 
-  /** The parsed plan if it passes [[validate]] — still unbound — or why not. */
-  def accept(spark: SparkSession, sql: String, allowedViews: Set[String],
-      functionAllowlist: Option[Set[String]] = None): Either[String, LogicalPlan] =
     parse(spark, sql).left.map(err => s"parse error: $err").flatMap { plan =>
-      validate(plan, allowedViews, functionAllowlist) match {
-        case Ok => Right(plan)
-        case Rejected(reason) => Left(reason)
+      // Same containment stance as parse(): fail-closed means fail CAUGHT.
+      // A plan deep enough to blow the walk's stack (it recurses per node
+      // and per subquery) must surface as a rejection, not escape as a JVM
+      // Error.
+      try Right(walk(plan, Set.empty))
+      catch {
+        case r: Refused => Left(r.reason)
+        case _: StackOverflowError => Left("query too deeply nested to validate")
       }
     }
-
-  def check(spark: SparkSession, sql: String, allowedViews: Set[String],
-      functionAllowlist: Option[Set[String]] = None): Verdict =
-    accept(spark, sql, allowedViews, functionAllowlist).fold(Rejected(_), _ => Ok)
+  }
 }

@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Bridge to the package-private Dataset constructor so library code can
   * materialize a DataFrame from a hand-built LogicalPlan (the standard
@@ -34,5 +34,17 @@ object GraftDataset {
   def count(df: DataFrame): Long = {
     val qe = df.select().queryExecution
     SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
+  }
+
+  /** The first `n` rows of `local`, the optimized plan of `df`, decoded by
+    * the deserializer `df.collect()` uses (the frame's encoder resolved
+    * against the plan's output): the rows `df.limit(n).collect()` returns,
+    * with no SQL execution. */
+  def localHead(df: DataFrame, local: LocalRelation, n: Int): Array[Row] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val fromRow = ds.exprEnc
+      .resolveAndBind(local.output, ds.sparkSession.sessionState.analyzer)
+      .createDeserializer()
+    local.data.iterator.take(n).map(fromRow).toArray
   }
 }

@@ -456,6 +456,41 @@ class EngineSpec extends SparkSpec {
     assert(ctx.rows == 100, ctx)
   }
 
+  test("a driver-local frame's head renders as its collect does, with no " +
+      "SQL execution") {
+    import org.apache.spark.sql.types._
+    val schema = StructType.fromDDL(
+      "d DATE, amt DECIMAL(12,3), ts TIMESTAMP, tags ARRAY<STRING>, s STRING")
+    val rows = (1 to 7).map { i =>
+      if (i == 3) Row(null, null, null, null, null)
+      else Row(java.sql.Date.valueOf(s"2024-01-0$i"),
+        new java.math.BigDecimal(s"$i.25"),
+        java.sql.Timestamp.valueOf(s"2024-03-0$i 12:34:56.789"),
+        Seq(s"t$i", null), if (i % 2 == 0) null else s"v$i")
+    }
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val want = (Prompts.schemaHeader(local) +: local.limit(5).collect().map(
+      _.toSeq.map(v => if (v == null) "null" else v.toString).mkString(" | ")))
+      .mkString("\n")
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        if (e.isInstanceOf[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart])
+          executions.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    val ctx = try {
+      val ctx = Prompts.describe("df", local)
+      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+      ctx
+    } finally sc.removeSparkListener(counter)
+    assert(executions.get == 0, "describing a driver-local frame runs no SQL execution")
+    assert(ctx.head == want, ctx.head)
+    assert(ctx.rows == 7 && ctx.head.linesIterator.size == 6, ctx)
+  }
+
   test("rowCount(exact) equals Dataset.count on every frame shape") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
     try {
@@ -939,7 +974,10 @@ class EngineSpec extends SparkSpec {
       ("WITH RECURSIVE df refers to itself", Seq("df" -> df),
         "WITH RECURSIVE df AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM df " +
           "WHERE n < 3) SELECT sum(n) FROM df",
-        scalar(spark.range(1, 4).agg(sum("id")))))
+        scalar(spark.range(1, 4).agg(sum("id")))),
+      ("WITH RECURSIVE r refers to itself", Seq("df" -> df),
+        "WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM r " +
+          "WHERE n < 3) SELECT sum(n) FROM r", "6"))
     // A caller's own view named df: a relation left unbound would read it.
     val decoy = Seq((100, "decoy", 100)).toDF("a", "fruits", "b")
     decoy.createOrReplaceTempView("df")

@@ -302,6 +302,13 @@ class GuardAcceptanceSpec extends SparkSpec {
     }
   }
 
+  test("a WITH RECURSIVE body reads its own name, in both modes") {
+    val sql = "WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL " +
+      "SELECT n + 1 FROM r WHERE n < 3) SELECT sum(n) FROM r"
+    for (mode <- Seq(None, allowMode))
+      assert(check(sql, mode) == SqlGuard.Ok, s"recursive CTE rejected ($mode)")
+  }
+
   test("the deny-only corpus rejects under allowlist mode with a " +
       "function-level reason (whitelist philosophy, not a traversal bug)") {
     for (sql <- legalDenyOnly) {

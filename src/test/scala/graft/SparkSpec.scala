@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one lazy SparkSession per JVM across suites. */
@@ -20,7 +21,14 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A suite's end releases the swept memos it filled and the blocks they
+    * pin, so the next suite on the shared session starts without them.
+    * Suites run one at a time in the forked test JVM, so no running suite
+    * loses a block. */
+  override protected def afterAll(): Unit =
+    try Harness.clearResidue(spark) finally super.afterAll()
 }

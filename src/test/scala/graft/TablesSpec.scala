@@ -102,4 +102,20 @@ class TablesSpec extends SparkSpec {
         .contains("Similarity" -> SessionMemo.FittedModel))
     } finally spark.catalog.dropTempView("graft_residue_probe")
   }
+
+  test("a suite's end releases the swept memos it filled") {
+    def swept = SessionMemo.entries(spark).exists(_._2 == SessionMemo.Swept)
+    val probe = new SparkSpec {
+      test("fills a swept memo") {
+        SparkEntry.queries("q_dedup_simhash")(spark, sf).queryExecution.toRdd.count()
+        assert(swept)
+      }
+    }
+    val silent = new org.scalatest.Reporter {
+      def apply(e: org.scalatest.events.Event): Unit = ()
+    }
+    val status = probe.run(None, org.scalatest.Args(silent))
+    assert(status.succeeds(), "the probe suite's test filled a swept memo")
+    assert(!swept, "its afterAll released it")
+  }
 }
