@@ -29,12 +29,13 @@ object SessionMemo {
     * loop — a 10× regression there would never have moved the number. */
   case object Swept extends Scope
 
-  /** Kept by a residue clear: the `Tables` reader frames. Metadata only —
-    * a lazy, unexecuted plan (resolved schema + file listing); no rows,
-    * nothing in executor storage, so every timed run still scans from
-    * disk. It is the path-based-read equivalent of what a catalog table
-    * gets for free, and of the codegen cache. A dir whose files are
-    * rewritten mid-session needs [[clear]]`(session)`. */
+  /** Kept by a residue clear: driver-side metadata, nothing in executor
+    * storage, so every timed run still scans from disk. The `Tables`
+    * reader frames (a lazy, unexecuted plan: resolved schema + file
+    * listing, what a catalog table gets for free) and the engine's table
+    * descriptions (prompt text per frame object, shared by every
+    * `GraftSession` on the session). A dir whose files are rewritten
+    * mid-session needs [[clear]]`(session)`. */
   case object Metadata extends Scope
 
   /** Kept by a residue clear: the KMeans centroids. q_ann_ivf_kmeans's
@@ -50,6 +51,12 @@ object SessionMemo {
   /** For driver-side values: dropping the entry is the whole release. */
   def noRelease[V]: (SparkSession, V) => Unit = (_, _) => ()
 
+  /** A value map keyed weakly on frame identity (`Dataset` overrides
+    * neither `equals` nor `hashCode`): an entry lives while its caller
+    * holds the frame, so a memo of these never pins a dropped frame. */
+  def weakFrames[V](): java.util.Map[DataFrame, V] =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, V]())
+
   final class Memo[K, V] private[SessionMemo] (val owner: String,
       val scope: Scope, release: (SparkSession, V) => Unit) {
     private val map = TrieMap.empty[(SparkSession, K), V]
@@ -58,6 +65,9 @@ object SessionMemo {
       map.getOrElseUpdate((s, k), v)
     def get(s: SparkSession, k: K): Option[V] = map.get((s, k))
     def put(s: SparkSession, k: K, v: V): Unit = map.update((s, k), v)
+
+    /** Release every entry `session` holds in this memo alone. */
+    def clear(session: SparkSession): Unit = evict(_ eq session)
 
     private[SessionMemo] def sessions = map.keysIterator.map(_._1)
     private[SessionMemo] def evict(session: SparkSession => Boolean): Unit =

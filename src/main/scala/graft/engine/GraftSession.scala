@@ -8,6 +8,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftshim.GraftDataset
 
+import graft.SessionMemo
+
 /** Typed error surface — SURVEY.md §2.1 exceptions mapping
   * (/root/reference/helpers/exceptions.py:8-73). The reference's silent
   * retry-exhaustion fall-through (SURVEY §7.5.2) is fixed: exhaustion is a
@@ -39,8 +41,7 @@ final case class GraftConfig(
     showSql: Boolean = false,
     anonymizeHead: Boolean = false,
     // exact row count per frame described (reference shape parity): at
-    // most one count job, none for a driver-local frame, and a frame is
-    // described once per session until clearCache. Flip off at large
+    // most one count job, none for a driver-local frame. Flip off at large
     // scale to use free optimizer stats / "unknown" for non-local frames.
     exactRowCount: Boolean = true,
     // generated SQL may ONLY call these functions — DEFAULT ON with the
@@ -115,40 +116,14 @@ final class GraftSession(
     }
   }
 
-  /** Table descriptions, memoized per frame object: a conversation pays a
-    * frame's row count and head collect once, and a frame bound under two
-    * names (`df1`, `df2`) is described once. Keyed on the frame's identity
-    * (`Dataset` overrides neither `equals` nor `hashCode`).
-    *
-    * Freshness: a frame's plan is fixed, and a file-backed frame keeps the
-    * file listing Spark took when the frame was built, so the same object
-    * scans the same files; a new frame object gets a new entry. Weak keys
-    * bound the memo by the frames the caller still holds. `clearCache()`
-    * is the invalidation hook (e.g. after files are rewritten in place).
-    * Only prompt text is reused: every ask still runs its own result query.
-    * Each withConfig view keeps its own memo, since `anonymizeHead` and
-    * `exactRowCount` shape the description. */
-  private val described = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Prompts.TableCtx]())
-
-  /** `df` described under `name`: from the memo, or built outside its lock
-    * and stored. */
-  private def describe(name: String, df: DataFrame): Prompts.TableCtx =
-    Option(described.get(df)).getOrElse {
-      val ctx = Prompts.describe(name, df, anonymize = config.anonymizeHead,
-        exactRowCount = config.exactRowCount)
-      described.put(df, ctx)
-      ctx
-    }.copy(name = name)
-
   /** Per-call config override, the reference's run(...,
     * is_conversational_answer=, show_code=, anonymize_df=,
     * use_error_correction_framework=) parameter surface
     * (polarsai/__init__.py:214-236): a lightweight session view with the
     * modified config that SHARES this session's SQL cache (and its
     * write-through file), so overriding rendering/retry behavior never
-    * re-generates SQL already paid for. `logs` and table descriptions are
-    * per-view.
+    * re-generates SQL already paid for. `logs` are per-view; table
+    * descriptions belong to the SparkSession (see `GraftSession.described`).
     *
     *   session.withConfig(_.copy(conversational = true)).ask(df, q)
     *   session.withConfig(_.copy(maxRetries = 0)).ask(df, q)  // no correction loop
@@ -211,9 +186,8 @@ final class GraftSession(
       attempts.lastOption.map(_.sql), Some(err), attempts.toList, promptId = promptId)
     try {
       // A description costs a row count and a head collect per frame, and
-      // only prompts read it: a cache hit whose SQL runs clean builds none,
-      // and a frame already described in this session is not described again.
-      lazy val tables = tables0.map { case (n, df) => describe(n, df) }
+      // only prompts read it: a cache hit whose SQL runs clean builds none.
+      lazy val tables = tables0.map { case (n, df) => GraftSession.describe(spark, config, n, df) }
 
       val key = cacheKey(question, tables0)
       val cached = if (config.enableCache) cache.get(key) else None
@@ -325,9 +299,10 @@ final class GraftSession(
   }
 
   /** Empties the answer cache (shared with withConfig views, and its
-    * cachePath file) and this session's table descriptions, so the next
-    * prompt re-counts and re-reads every frame. */
-  def clearCache(): Unit = { cache.clear(); described.clear(); persistCache() }
+    * cachePath file) and every table description held for `spark` (by any
+    * GraftSession on it), so the next prompt re-counts and re-reads every
+    * frame. */
+  def clearCache(): Unit = { cache.clear(); GraftSession.described.clear(spark); persistCache() }
   def cacheSize: Int = cache.size
 
   /** Chart-aware ask: the normal ask-loop plus, when config.saveCharts is
@@ -385,6 +360,30 @@ object GraftSession {
     * trail instead); mapped to the typed NoSqlFound error in askNamed. */
   private[engine] final class NoSqlInResponse(msg: String)
     extends RuntimeException(msg)
+
+  /** Table descriptions per SparkSession and the two flags that shape the
+    * text (`anonymizeHead`, `exactRowCount`), then weakly per frame object:
+    * all GraftSessions on a SparkSession pay a frame's count and head once,
+    * a frame bound as both `df1` and `df2` is described once, and a frame
+    * the caller drops stays collectable. A frame's plan and file listing
+    * are fixed when it is built; a new frame object is described afresh.
+    * `clearCache()` or `SessionMemo.clear(spark)` invalidates (e.g. after
+    * files are rewritten in place). Only prompt text is reused. */
+  private val described = SessionMemo[(Boolean, Boolean), java.util.Map[DataFrame, Prompts.TableCtx]](
+    "GraftSession", SessionMemo.Metadata, SessionMemo.noRelease)
+
+  /** `df` described under `name`: from the memo, or built outside its lock. */
+  private def describe(spark: SparkSession, config: GraftConfig, name: String,
+      df: DataFrame): Prompts.TableCtx = {
+    val frames = described.getOrElseUpdate(spark,
+      (config.anonymizeHead, config.exactRowCount), SessionMemo.weakFrames())
+    Option(frames.get(df)).getOrElse {
+      val ctx = Prompts.describe(name, df, anonymize = config.anonymizeHead,
+        exactRowCount = config.exactRowCount)
+      frames.put(df, ctx)
+      ctx
+    }.copy(name = name)
+  }
 }
 
 /** Canned-prompt shortcut recipes — SURVEY.md §2.2

@@ -54,8 +54,8 @@ object Prompts {
     * one for the head collect and one for the row count (see `rowCount`;
     * none for an estimate). The count reads no column, so it is kept apart
     * from the head rather than folded into one all-columns pass.
-    * GraftSession calls it once per frame object per session and reuses
-    * the result. */
+    * GraftSession memoizes the result per SparkSession, flag pair and frame
+    * object, so every engine on that SparkSession reuses it. */
   def describe(name: String, df: DataFrame, n: Int = 5,
       anonymize: Boolean = false, exactRowCount: Boolean = true): TableCtx = {
     val header = schemaHeader(df)

@@ -832,44 +832,42 @@ object Dedup {
     // precedent).
     "q_dedup_index" -> ((s, d) => {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val wh = new java.io.File(new java.io.File(sys.props("java.io.tmpdir")),
-        s"graft_dedup_idx_$tag").getAbsolutePath
+      val wh = scratch(s"graft_dedup_idx_$tag")
       val idxTbl = s"graft_band_idx_$tag"
-      val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      bandsOf(corpus)
-        .select(md5(concat(col("band").cast("string"), col("bkey")))
-          .as("probe"), col("doc_id"))
-        .write.mode("overwrite").bucketBy(8, "probe")
-        .option("path", s"$wh/band_idx").saveAsTable(idxTbl)
-      val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          regexp_replace(col("text"), "^[^ ]+", "zzz").as("text"))
-      val batchProbe = bandsOf(batch)
-        .select(md5(concat(col("band").cast("string"), col("bkey")))
-          .as("probe"), col("doc_id").as("bid"))
-      val joined = s.table(idxTbl).hint("merge")
-        .join(batchProbe, Seq("probe"))
-      joined.queryExecution.toRdd.foreach(_ => ())
-      val finalPlan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      // the batch chain legitimately shuffles internally (its signature
-      // aggregate); the verdict counts only JOIN-KEY exchanges: exactly
-      // one side (the batch) may repartition on `probe`, and the corpus
-      // scan must come in bucketed
-      val probeExchanges = finalPlan
-        .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(probe"), -1)
-        .length - 1
-      val verdict =
-        if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
-      val out = joined.select(col("bid"), col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(batch.agg(count(lit(1)).as("n_batch_docs")))
-        .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
-        .withColumn("corpus_side_exchange_free", lit(verdict))
-        .localCheckpoint(true)
-      s.sql(s"DROP TABLE IF EXISTS $idxTbl")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
-      out
+      dropAfter(s, wh, idxTbl) {
+        val corpus = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        bandsOf(corpus)
+          .select(md5(concat(col("band").cast("string"), col("bkey")))
+            .as("probe"), col("doc_id"))
+          .write.mode("overwrite").bucketBy(8, "probe")
+          .option("path", s"$wh/band_idx").saveAsTable(idxTbl)
+        val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+          .select((col("doc_id") + 100000).as("doc_id"),
+            regexp_replace(col("text"), "^[^ ]+", "zzz").as("text"))
+        val batchProbe = bandsOf(batch)
+          .select(md5(concat(col("band").cast("string"), col("bkey")))
+            .as("probe"), col("doc_id").as("bid"))
+        val joined = s.table(idxTbl).hint("merge")
+          .join(batchProbe, Seq("probe"))
+        joined.queryExecution.toRdd.foreach(_ => ())
+        val finalPlan = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        // the batch chain legitimately shuffles internally (its signature
+        // aggregate); the verdict counts only JOIN-KEY exchanges: exactly
+        // one side (the batch) may repartition on `probe`, and the corpus
+        // scan must come in bucketed
+        val probeExchanges = finalPlan
+          .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(probe"), -1)
+          .length - 1
+        val verdict =
+          if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
+        joined.select(col("bid"), col("doc_id")).distinct()
+          .agg(count(lit(1)).as("n_candidates"))
+          .crossJoin(batch.agg(count(lit(1)).as("n_batch_docs")))
+          .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
+          .withColumn("corpus_side_exchange_free", lit(verdict))
+          .localCheckpoint(true)
+      }
     }),
 
     // Persistent EMBEDDING dedup index — the vector face of q_dedup_index:
@@ -886,53 +884,51 @@ object Dedup {
     "q_embed_index" -> ((s, d) => {
       graft.functions.FloatDotProduct.register(s)
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val wh = new java.io.File(new java.io.File(sys.props("java.io.tmpdir")),
-        s"graft_embed_idx_$tag").getAbsolutePath
+      val wh = scratch(s"graft_embed_idx_$tag")
       val idxTbl = s"graft_embed_idx_$tag"
-      val e = Tables.embeddings(s, d)
-      e.select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", expr("sqrt(dot_f(embedding, embedding))"))
-        .withColumn("sig", expr(Similarity.sigExpr("spark")))
-        .write.mode("overwrite").bucketBy(8, "sig")
-        .option("path", s"$wh/embed_idx").saveAsTable(idxTbl)
-      val scaled = e.filter(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x * 2 AS FLOAT))").as("embedding"))
-      val perturbed = e.filter(col("vec_id") % 10 === 5)
-        .withColumn("d0", expr(Similarity.dotPlane(0, "spark")))
-        .select((col("vec_id") + 200000).as("vec_id"),
-          expr("zip_with(embedding, " + Similarity.planeLit(0, "spark") +
-            ", (x, h) -> CAST(CAST(x AS DOUBLE) - d0 * 1.05 / 64 * h AS FLOAT))")
-            .as("embedding"))
-      val batch = scaled.unionByName(perturbed)
-      val batchProbe = batch
-        .withColumn("nb", expr("sqrt(dot_f(embedding, embedding))"))
-        .withColumn("sig0", expr(Similarity.sigExpr("spark")))
-        .select(col("vec_id").as("bid"), col("embedding").as("eb"),
-          col("nb"),
-          explode(expr(Similarity.probesExpr("sig0", "spark"))).as("sig"))
-      val joined = s.table(idxTbl).hint("merge")
-        .join(batchProbe, Seq("sig"))
-        .withColumn("cos",
-          round(expr("dot_f(embedding, eb)") / (col("nrm") * col("nb")), 6))
-        .filter(col("cos") >= 0.99)
-      joined.queryExecution.toRdd.foreach(_ => ())
-      val finalPlan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val probeExchanges = finalPlan
-        .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(sig"), -1)
-        .length - 1
-      val verdict =
-        if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
-      val out = joined.select(col("bid"), col("vec_id")).distinct()
-        .agg(count(lit(1)).as("n_pairs"))
-        .crossJoin(batch.agg(count(lit(1)).as("n_batch_vecs")))
-        .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
-        .withColumn("corpus_side_exchange_free", lit(verdict))
-        .localCheckpoint(true)
-      s.sql(s"DROP TABLE IF EXISTS $idxTbl")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
-      out
+      dropAfter(s, wh, idxTbl) {
+        val e = Tables.embeddings(s, d)
+        e.select(col("vec_id"), col("embedding"))
+          .withColumn("nrm", expr("sqrt(dot_f(embedding, embedding))"))
+          .withColumn("sig", expr(Similarity.sigExpr("spark")))
+          .write.mode("overwrite").bucketBy(8, "sig")
+          .option("path", s"$wh/embed_idx").saveAsTable(idxTbl)
+        val scaled = e.filter(col("vec_id") % 10 === 0)
+          .select((col("vec_id") + 100000).as("vec_id"),
+            expr("transform(embedding, x -> CAST(x * 2 AS FLOAT))").as("embedding"))
+        val perturbed = e.filter(col("vec_id") % 10 === 5)
+          .withColumn("d0", expr(Similarity.dotPlane(0, "spark")))
+          .select((col("vec_id") + 200000).as("vec_id"),
+            expr("zip_with(embedding, " + Similarity.planeLit(0, "spark") +
+              ", (x, h) -> CAST(CAST(x AS DOUBLE) - d0 * 1.05 / 64 * h AS FLOAT))")
+              .as("embedding"))
+        val batch = scaled.unionByName(perturbed)
+        val batchProbe = batch
+          .withColumn("nb", expr("sqrt(dot_f(embedding, embedding))"))
+          .withColumn("sig0", expr(Similarity.sigExpr("spark")))
+          .select(col("vec_id").as("bid"), col("embedding").as("eb"),
+            col("nb"),
+            explode(expr(Similarity.probesExpr("sig0", "spark"))).as("sig"))
+        val joined = s.table(idxTbl).hint("merge")
+          .join(batchProbe, Seq("sig"))
+          .withColumn("cos",
+            round(expr("dot_f(embedding, eb)") / (col("nrm") * col("nb")), 6))
+          .filter(col("cos") >= 0.99)
+        joined.queryExecution.toRdd.foreach(_ => ())
+        val finalPlan = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val probeExchanges = finalPlan
+          .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(sig"), -1)
+          .length - 1
+        val verdict =
+          if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
+        joined.select(col("bid"), col("vec_id")).distinct()
+          .agg(count(lit(1)).as("n_pairs"))
+          .crossJoin(batch.agg(count(lit(1)).as("n_batch_vecs")))
+          .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
+          .withColumn("corpus_side_exchange_free", lit(verdict))
+          .localCheckpoint(true)
+      }
     }),
 
     // Threshold calibration table — before trusting SIGNATURE-ONLY dedup
@@ -1139,45 +1135,43 @@ object Dedup {
     "q_simhash_index" -> ((s, d) => {
       graft.functions.TextStats.register(s)
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val wh = new java.io.File(new java.io.File(sys.props("java.io.tmpdir")),
-        s"graft_sh_idx_$tag").getAbsolutePath
+      val wh = scratch(s"graft_sh_idx_$tag")
       val idxTbl = s"graft_simhash_idx_$tag"
-      def bandedProbe(df: DataFrame): DataFrame = df
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          coalesce(expr(
-            "graft_simhash(filter(split(text, ' '), x -> length(x) > 0), 64)"),
-            lit("0" * 64)).as("sig"))
-        .select(col("doc_id"), explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            substring(col("sig"), b * 16 + 1, 16).as("bkey"))): _*)).as("bb"))
-        .select(md5(concat(col("bb.band").cast("string"), col("bb.bkey")))
-          .as("probe"), col("doc_id"))
-      bandedProbe(Tables.documents(s, d).select(col("doc_id"), col("text")))
-        .write.mode("overwrite").bucketBy(8, "probe")
-        .option("path", s"$wh/sh_idx").saveAsTable(idxTbl)
-      val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          regexp_replace(col("text"), "^[^ ]+", "zzz").as("text"))
-      val batchProbe = bandedProbe(batch).withColumnRenamed("doc_id", "bid")
-      val joined = s.table(idxTbl).hint("merge").join(batchProbe, Seq("probe"))
-      joined.queryExecution.toRdd.foreach(_ => ())
-      val finalPlan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val probeExchanges = finalPlan
-        .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(probe"), -1)
-        .length - 1
-      val verdict =
-        if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
-      val out = joined.select(col("bid"), col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(batch.agg(count(lit(1)).as("n_batch_docs")))
-        .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
-        .withColumn("corpus_side_exchange_free", lit(verdict))
-        .localCheckpoint(true)
-      s.sql(s"DROP TABLE IF EXISTS $idxTbl")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
-      out
+      dropAfter(s, wh, idxTbl) {
+        def bandedProbe(df: DataFrame): DataFrame = df
+          .filter(col("text").isNotNull)
+          .select(col("doc_id"),
+            coalesce(expr(
+              "graft_simhash(filter(split(text, ' '), x -> length(x) > 0), 64)"),
+              lit("0" * 64)).as("sig"))
+          .select(col("doc_id"), explode(array((0 until 4).map(b =>
+            struct(lit(b).as("band"),
+              substring(col("sig"), b * 16 + 1, 16).as("bkey"))): _*)).as("bb"))
+          .select(md5(concat(col("bb.band").cast("string"), col("bb.bkey")))
+            .as("probe"), col("doc_id"))
+        bandedProbe(Tables.documents(s, d).select(col("doc_id"), col("text")))
+          .write.mode("overwrite").bucketBy(8, "probe")
+          .option("path", s"$wh/sh_idx").saveAsTable(idxTbl)
+        val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+          .select((col("doc_id") + 100000).as("doc_id"),
+            regexp_replace(col("text"), "^[^ ]+", "zzz").as("text"))
+        val batchProbe = bandedProbe(batch).withColumnRenamed("doc_id", "bid")
+        val joined = s.table(idxTbl).hint("merge").join(batchProbe, Seq("probe"))
+        joined.queryExecution.toRdd.foreach(_ => ())
+        val finalPlan = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val probeExchanges = finalPlan
+          .split(java.util.regex.Pattern.quote("Exchange hashpartitioning(probe"), -1)
+          .length - 1
+        val verdict =
+          if (probeExchanges == 1 && finalPlan.contains("Bucketed: true")) 1 else 0
+        joined.select(col("bid"), col("doc_id")).distinct()
+          .agg(count(lit(1)).as("n_candidates"))
+          .crossJoin(batch.agg(count(lit(1)).as("n_batch_docs")))
+          .crossJoin(s.table(idxTbl).agg(count(lit(1)).as("n_index_rows")))
+          .withColumn("corpus_side_exchange_free", lit(verdict))
+          .localCheckpoint(true)
+      }
     }),
 
     // Transitive dedup clustering — the dedup endgame: VERIFIED near-dup

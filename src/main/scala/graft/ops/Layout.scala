@@ -26,14 +26,6 @@ import graft.Tables.Q
   */
 object Layout {
 
-  /** Same contract as Sources.scratch: shared filesystem on a real
-    * cluster (SPARK_GRAFT_SCRATCH), local tmpdir in local mode. */
-  private def scratch(name: String): String =
-    sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(root => s"${root.stripSuffix("/")}/graft_layout/$name")
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_layout", name).toString)
-
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 
@@ -52,44 +44,42 @@ object Layout {
     // can't clobber each other or read a verdict off another run's tables.
     "q_bucket_join" -> ((s, d) => {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val wh = scratch(s"bucket_wh_$tag")
+      val wh = scratch(s"graft_layout/bucket_wh_$tag")
       val ordersTbl = s"graft_orders_bkt_$tag"
       val liTbl = s"graft_li_bkt_$tag"
-      Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$wh/orders_bkt").saveAsTable(ordersTbl)
-      Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_lines"))
-        .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$wh/li_bkt").saveAsTable(liTbl)
-      val joined = s.table(ordersTbl).hint("merge")
-        .join(s.table(liTbl), col("o_orderkey") === col("l_orderkey"))
-      // ONE execution (the r12 shape drained the bare join a first full
-      // time just to finalize its AQE plan for the verdict, then the
-      // checkpoint re-ran it inside the real query — the q_recommend_probe
-      // fix, guide §1.4). The join is a subtree of the executed final
-      // plan; the only other exchange there keys on o_orderstatus (the
-      // report aggregate), so the verdict checks exactly the property the
-      // demonstration makes: no exchange on either JOIN key + both scans
-      // bucketed.
-      val pre = joined.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"), sum("n_lines").as("total_lines"),
-          round(sum("o_totalprice"), 2).as("total_price"))
-        .orderBy("o_orderstatus")
-      val out0 = pre.localCheckpoint(true)
-      val finalPlan = pre.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val joinKeyExchanges =
-        countOccurrences(finalPlan, "Exchange hashpartitioning(o_orderkey") +
-          countOccurrences(finalPlan, "Exchange hashpartitioning(l_orderkey")
-      val out = out0.withColumn("exchange_free",
-        lit(if (joinKeyExchanges == 0 && finalPlan.contains("Bucketed: true")) 1
-          else 0))
-      s.sql(s"DROP TABLE IF EXISTS $ordersTbl")
-      s.sql(s"DROP TABLE IF EXISTS $liTbl")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
-      out
+      dropAfter(s, wh, ordersTbl, liTbl) {
+        Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
+          .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .option("path", s"$wh/orders_bkt").saveAsTable(ordersTbl)
+        Tables.lineitem(s, d)
+          .groupBy(col("l_orderkey"))
+          .agg(count(lit(1)).as("n_lines"))
+          .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .option("path", s"$wh/li_bkt").saveAsTable(liTbl)
+        val joined = s.table(ordersTbl).hint("merge")
+          .join(s.table(liTbl), col("o_orderkey") === col("l_orderkey"))
+        // ONE execution (the r12 shape drained the bare join a first full
+        // time just to finalize its AQE plan for the verdict, then the
+        // checkpoint re-ran it inside the real query — the q_recommend_probe
+        // fix, guide §1.4). The join is a subtree of the executed final
+        // plan; the only other exchange there keys on o_orderstatus (the
+        // report aggregate), so the verdict checks exactly the property the
+        // demonstration makes: no exchange on either JOIN key + both scans
+        // bucketed.
+        val pre = joined.groupBy("o_orderstatus")
+          .agg(count(lit(1)).as("n_orders"), sum("n_lines").as("total_lines"),
+            round(sum("o_totalprice"), 2).as("total_price"))
+          .orderBy("o_orderstatus")
+        val out0 = pre.localCheckpoint(true)
+        val finalPlan = pre.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val joinKeyExchanges =
+          countOccurrences(finalPlan, "Exchange hashpartitioning(o_orderkey") +
+            countOccurrences(finalPlan, "Exchange hashpartitioning(l_orderkey")
+        out0.withColumn("exchange_free",
+          lit(if (joinKeyExchanges == 0 && finalPlan.contains("Bucketed: true")) 1
+            else 0))
+      }
     }),
 
     // partitionBy layout: write lineitem hive-partitioned by l_returnflag,
@@ -99,7 +89,7 @@ object Layout {
     // reads everything and filters rows after IO. `partition_pruned` is
     // derived from the scan plan and asserted by the oracle.
     "q_sink_partitioned" -> ((s, d) => {
-      val path = scratch("li_by_flag")
+      val path = scratch("graft_layout/li_by_flag")
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag")
         .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -137,8 +127,8 @@ object Layout {
       val hi = lit(java.sql.Timestamp.valueOf("1995-09-01 00:00:00"))
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_shipdate")
-      val clusteredPath = scratch("li_clustered")
-      val scatteredPath = scratch("li_scattered")
+      val clusteredPath = scratch("graft_layout/li_clustered")
+      val scatteredPath = scratch("graft_layout/li_scattered")
       li.repartitionByRange(8, col("l_shipdate"))
         .write.mode("overwrite").parquet(clusteredPath)
       li.repartition(8, col("l_orderkey"))
@@ -193,8 +183,8 @@ object Layout {
             "shiftleft(xb & 4, 3) | shiftleft(yb & 4, 2) | " +
             "shiftleft(xb & 2, 2) | shiftleft(yb & 2, 1) | " +
             "shiftleft(xb & 1, 1) | (yb & 1)"))
-      val zPath = scratch("li_zorder")
-      val scatteredPath = scratch("li_zscattered")
+      val zPath = scratch("graft_layout/li_zorder")
+      val scatteredPath = scratch("graft_layout/li_zscattered")
       li.repartitionByRange(8, col("z"))
         .drop("xb", "yb", "z")
         .write.mode("overwrite").parquet(zPath)
@@ -236,8 +226,8 @@ object Layout {
     // are driver-side directory metadata, same contract as q_sink_zstd.
     "q_compact_files" -> ((s, d) => {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val smallPath = scratch(s"compact_small_$tag")
-      val bigPath = scratch(s"compact_big_$tag")
+      val smallPath = scratch(s"graft_layout/compact_small_$tag")
+      val bigPath = scratch(s"graft_layout/compact_big_$tag")
       val docs = Tables.documents(s, d).select("doc_id", "text", "source")
       // the source-side row count AND content digest ride the pathological
       // write as an Observation (the q_observe pattern, guide §1.4): the

@@ -23,15 +23,6 @@ import graft.Tables.Q
   */
 object Sources {
 
-  /** Round-trip scratch root. On a cluster this must be a shared filesystem
-    * (HDFS/S3/NFS) visible to every executor — set SPARK_GRAFT_SCRATCH;
-    * local tmpdir is only correct in local mode. */
-  private def scratch(name: String): String =
-    sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(root => s"${root.stripSuffix("/")}/graft_io/$name")
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_io", name).toString)
-
   /** status-level money summary — identical shape for every round-trip. */
   private def summarize(df: DataFrame): DataFrame =
     df.groupBy("o_orderstatus")
@@ -45,7 +36,7 @@ object Sources {
   val queries: Map[String, Q] = Map(
     // write_csv → read_csv(header, inferSchema) round-trip.
     "q_scan_csv" -> ((s, d) => {
-      val path = scratch("orders_csv")
+      val path = scratch("graft_io/orders_csv")
       Tables.orders(s, d).select("o_orderstatus", "o_totalprice")
         .write.mode("overwrite").option("header", "true").csv(path)
       summarize(s.read.option("header", "true").option("inferSchema", "true")
@@ -54,7 +45,7 @@ object Sources {
 
     // write_json → read_json round-trip.
     "q_scan_json" -> ((s, d) => {
-      val path = scratch("orders_json")
+      val path = scratch("graft_io/orders_json")
       Tables.orders(s, d).select("o_orderstatus", "o_totalprice")
         .write.mode("overwrite").json(path)
       val r = s.read.json(path)
@@ -71,7 +62,7 @@ object Sources {
     // write_parquet → read-back round-trip (the sink path of the t1/t2
     // workhorse format).
     "q_sink_parquet" -> ((s, d) => {
-      val path = scratch("orders_parquet")
+      val path = scratch("graft_io/orders_parquet")
       Tables.orders(s, d).select("o_orderstatus", "o_totalprice")
         .write.mode("overwrite").parquet(path)
       summarize(s.read.parquet(path))
@@ -85,7 +76,7 @@ object Sources {
     // multiset-parity digest — no sort, no collect, no ANSI sum overflow,
     // scan-speed on both sides).
     "q_scan_text" -> ((s, d) => {
-      val path = scratch("docs_txt")
+      val path = scratch("graft_io/docs_txt")
       Tables.documents(s, d).select("text")
         .write.mode("overwrite").text(path)
       val file = s.read.text(path)
@@ -109,8 +100,8 @@ object Sources {
     // through the driver) and proves both stay readable with equal row
     // counts.
     "q_sink_zstd" -> ((s, d) => {
-      val snappyPath = scratch("docs_snappy")
-      val zstdPath = scratch("docs_zstd")
+      val snappyPath = scratch("graft_io/docs_snappy")
+      val zstdPath = scratch("graft_io/docs_zstd")
       val docs = Tables.documents(s, d).select("doc_id", "text")
       docs.write.mode("overwrite")
         .option("compression", "snappy").parquet(snappyPath)
@@ -132,7 +123,7 @@ object Sources {
     // write_orc → read-back round-trip (columnar alternative to parquet,
     // built into spark-sql).
     "q_scan_orc" -> ((s, d) => {
-      val path = scratch("orders_orc")
+      val path = scratch("graft_io/orders_orc")
       Tables.orders(s, d).select("o_orderstatus", "o_totalprice")
         .write.mode("overwrite").orc(path)
       summarize(s.read.orc(path))
@@ -144,7 +135,7 @@ object Sources {
     // container writes, binaryFile-scan + mapPartitions decode reads.
     // Same lossless round-trip contract as the CSV/JSON/ORC scans.
     "q_scan_avro" -> ((s, d) => {
-      val path = scratch("orders_avro")
+      val path = scratch("graft_io/orders_avro")
       graft.sources.AvroIO.write(
         Tables.orders(s, d).select("o_orderstatus", "o_totalprice"), path)
       summarize(graft.sources.AvroIO.read(s, path))
@@ -155,7 +146,7 @@ object Sources {
     // IPC format on the arrow-vector jars Spark already ships — polars
     // reads these files and vice versa.
     "q_scan_arrow" -> ((s, d) => {
-      val path = scratch("orders_arrow")
+      val path = scratch("graft_io/orders_arrow")
       graft.sources.ArrowIO.write(
         Tables.orders(s, d).select("o_orderstatus", "o_totalprice"), path)
       summarize(graft.sources.ArrowIO.read(s, path))
@@ -169,7 +160,7 @@ object Sources {
     // reality); the query casts explicitly — same lossless round-trip
     // contract as the other scans.
     "q_scan_excel" -> ((s, d) => {
-      val path = scratch("orders_xlsx")
+      val path = scratch("graft_io/orders_xlsx")
       graft.sources.ExcelIO.write(
         Tables.orders(s, d).select("o_orderstatus", "o_totalprice"), path)
       summarize(graft.sources.ExcelIO.read(s, path)
@@ -233,7 +224,7 @@ object Sources {
     // no post-hoc repartition pass), and the verdict columns are computed
     // from the actual shard listing, not assumed.
     "q_shard_write" -> ((s, d) => {
-      val path = scratch("doc_shards")
+      val path = scratch("graft_io/doc_shards")
       val docs = Tables.documents(s, d).select("doc_id", "text", "source")
       docs.repartitionByRange(8, col("doc_id"))
         .write.mode("overwrite").option("maxRecordsPerFile", 32).parquet(path)

@@ -58,6 +58,21 @@ class BucketingSpec extends SparkSpec {
       "both concurrent joins must be exchange-free")
   }
 
+  test("a query that throws after saving its scratch table still drops it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_scratch").toString
+    val tbl = s"graft_scratch_${java.util.UUID.randomUUID().toString.take(8)}"
+    val err = intercept[IllegalStateException] {
+      ops.dropAfter(spark, dir, tbl) {
+        spark.range(3).write.option("path", s"$dir/t").saveAsTable(tbl)
+        assert(spark.catalog.tableExists(tbl))
+        throw new IllegalStateException("failed mid-query")
+      }
+    }
+    assert(err.getMessage == "failed mid-query", "the query's own error surfaces")
+    assert(!spark.catalog.tableExists(tbl), "the scratch table outlives its failed query")
+    assert(!new java.io.File(dir).exists, "the scratch dir outlives its failed query")
+  }
+
   test("q_dedup_index: bucketed band index probes with zero corpus-side exchange") {
     val r = SparkEntry.queries("q_dedup_index")(spark, sf).collect()
     assert(r.length == 1)

@@ -390,19 +390,30 @@ class EngineSpec extends SparkSpec {
       "a second cold question on the same frame scans for its result only")
     assert(llm.callCount == 2, "both questions were cold")
     assert(tableBlock(llm.lastPrompt.get) == first)
-    s.clearCache()
+    // descriptions belong to the SparkSession: a second engine on it reuses
+    // them, and either engine's clearCache drops them for both
+    val other = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s2 = new GraftSession(spark, other)
+    assert(delta(s2, Seq(df), "rows, asked elsewhere?") == 5,
+      "a second session's cold ask on a described frame scans for its result only")
+    assert(tableBlock(other.lastPrompt.get) == first)
+    s2.clearCache()
     assert(delta(s, Seq(df), "how many rows, once more?") == 15,
       "clearCache drops the descriptions")
+    s.clearCache()
+    assert(delta(s2, Seq(df), "rows, asked elsewhere, again?") == 15,
+      "the first session's clearCache drops them for the second too")
     assert(delta(s, Seq(frame), "how many rows in the new frame?") == 15,
       "a new frame object with the same rows is described afresh")
 
     // one frame bound under two names is described once
     val two = FakeLlm("```sql\nSELECT count(*) AS n FROM df1\n```")
-    assert(delta(new GraftSession(spark, two), Seq(df, df), "rows in df1?") == 15)
+    val twice = frame
+    assert(delta(new GraftSession(spark, two), Seq(twice, twice), "rows in df1?") == 15)
     assert(two.lastPrompt.get.contains("Table `df1`") &&
       two.lastPrompt.get.contains("Table `df2`"), two.lastPrompt.get)
 
-    // a withConfig view keeps its own memo: anonymizeHead applies even to a
+    // descriptions are kept per flag pair: anonymizeHead applies even to a
     // frame the parent has already described with real values
     val fruit = freshDf
     s.ask(fruit, "how many fruit rows?")
@@ -412,7 +423,27 @@ class EngineSpec extends SparkSpec {
     assert(masked.contains("str_0") && !masked.contains("banana") &&
       !masked.contains("apple"), masked)
     s.ask(fruit, "how many fruit rows, again?")
-    assert(llm.lastPrompt.get.contains("banana"), "the parent's memo is its own")
+    assert(llm.lastPrompt.get.contains("banana"), "the parent keeps its unmasked description")
+  }
+
+  test("a described frame stays collectable once the caller drops it") {
+    val llm = FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+    val s = new GraftSession(spark, llm)
+    // the frame's only strong reference is local to this method
+    def describedAndDropped(): java.lang.ref.WeakReference[org.apache.spark.sql.DataFrame] = {
+      val df = spark.range(1, 6, 1, 1).toDF("a")
+      assert(s.ask(df, "how many rows?").text == "5")
+      assert(llm.lastPrompt.get.contains("with 5 rows"), llm.lastPrompt.get)
+      new java.lang.ref.WeakReference(df)
+    }
+    val ref = describedAndDropped()
+    var rounds = 0
+    while (ref.get != null && rounds < 50) {
+      System.gc()
+      Thread.sleep(20)
+      rounds += 1
+    }
+    assert(ref.get == null, s"the description memo pins a dropped frame ($rounds GCs)")
   }
 
   /** Spark jobs `body` submits, counted exactly: they carry a fresh job

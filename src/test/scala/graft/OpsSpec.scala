@@ -1506,11 +1506,27 @@ class OpsSpec extends SparkSpec {
     for (s <- Seq(spark, s2))
       assert(!owners(s).contains("Dedup") &&
         (filled - "Dedup").subsetOf(owners(s)), owners(s))
-    // evicting s2 empties every scope for s2, reader frames included,
-    // and must not touch the primary session's entries
+    // a server's per-user session: an engine on s2 describes a frame (as
+    // one on the primary session does) and s2 persists a swept frame
+    def rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val before = rdds
+    SparkEntry.queries("q_dedup_simhash")(s2, sf).queryExecution.toRdd.count()
+    val s2Rdds = rdds -- before
+    assert(s2Rdds.nonEmpty, "s2's swept frame was not persisted")
+    val frame = spark.range(3).toDF("a")
+    for (s <- Seq(spark, s2)) {
+      val llm = engine.FakeLlm("```sql\nSELECT count(*) AS n FROM df\n```")
+      assert(new engine.GraftSession(s, llm).ask(frame, "rows?").text == "3")
+      assert(owners(s).contains("GraftSession"), owners(s))
+    }
+    val kept = SessionMemo.entries(spark)
+    // evicting s2 empties every scope for s2 (descriptions, reader frames,
+    // swept frames and their blocks) and must not touch the primary
+    // session's entries
     SessionMemo.clear(s2)
     assert(SessionMemo.entries(s2).isEmpty)
-    assert((filled - "Dedup").subsetOf(owners(spark)),
+    assert((s2Rdds & rdds).isEmpty, "s2's persisted RDDs outlive it")
+    assert(SessionMemo.entries(spark) == kept,
       "session-scoped eviction must leave other sessions' memos intact")
     SessionMemo.clear(spark, SessionMemo.Swept)
     assert(SessionMemo.entries(spark).forall(_._2 != SessionMemo.Swept))
@@ -1518,10 +1534,12 @@ class OpsSpec extends SparkSpec {
   }
 
   test("no memo keyed on SparkSession lives outside SessionMemo") {
-    // a TrieMap/WeakHashMap whose first type argument (the key) names
-    // SparkSession, in any main source but the registry itself
+    // a map construction (`new …Map[`, `…Map.empty[`, `TrieMap[`) whose
+    // first type argument (the key) names SparkSession or DataFrame, in any
+    // main source but the registry itself
     import scala.jdk.CollectionConverters._
-    val opener = raw"\b(?:TrieMap|WeakHashMap)\s*(?:\.\s*empty\s*)?\[".r
+    val opener = raw"\bnew\s+[\w.]*Map\s*\[|\b\w*Map\s*\.\s*empty\s*\[|\bTrieMap\s*\[".r
+    val keyed = raw"\b(?:SparkSession|DataFrame|Dataset)\b".r
     def keyType(src: String, open: Int): String = {
       var depth = 0
       var i = open
@@ -1541,7 +1559,7 @@ class OpsSpec extends SparkSpec {
     val strays = sources.flatMap { p =>
       val src = java.nio.file.Files.readString(p)
       opener.findAllMatchIn(src)
-        .filter(m => keyType(src, m.end - 1).contains("SparkSession"))
+        .filter(m => keyed.findFirstIn(keyType(src, m.end - 1)).isDefined)
         .map(m => s"$p: ${src.substring(m.start, m.end)}")
     }
     assert(sources.nonEmpty)
