@@ -299,9 +299,8 @@ final class GraftSession(
   }
 
   /** Empties the answer cache (shared with withConfig views, and its
-    * cachePath file) and every table description held for `spark` (by any
-    * GraftSession on it), so the next prompt re-counts and re-reads every
-    * frame. */
+    * cachePath file) and every GraftSession's table descriptions on
+    * `spark`, so the next prompt re-counts and re-reads every frame. */
   def clearCache(): Unit = { cache.clear(); GraftSession.described.clear(spark); persistCache() }
   def cacheSize: Int = cache.size
 
@@ -361,27 +360,22 @@ object GraftSession {
   private[engine] final class NoSqlInResponse(msg: String)
     extends RuntimeException(msg)
 
-  /** Table descriptions per SparkSession and the two flags that shape the
-    * text (`anonymizeHead`, `exactRowCount`), then weakly per frame object:
-    * all GraftSessions on a SparkSession pay a frame's count and head once,
-    * a frame bound as both `df1` and `df2` is described once, and a frame
-    * the caller drops stays collectable. A frame's plan and file listing
-    * are fixed when it is built; a new frame object is described afresh.
-    * `clearCache()` or `SessionMemo.clear(spark)` invalidates (e.g. after
-    * files are rewritten in place). Only prompt text is reused. */
+  /** Prompt text per SparkSession, text-shaping flags (`anonymizeHead`,
+    * `exactRowCount`) and, weakly, frame object: every GraftSession on a
+    * SparkSession describes a frame (even one bound as `df1` and `df2`)
+    * once, and a dropped frame stays collectable. A frame's plan and file
+    * listing are fixed at build; `clearCache()` invalidates (after in-place rewrites). */
   private val described = SessionMemo[(Boolean, Boolean), java.util.Map[DataFrame, Prompts.TableCtx]](
     "GraftSession", SessionMemo.Metadata, SessionMemo.noRelease)
 
   /** `df` described under `name`: from the memo, or built outside its lock. */
-  private def describe(spark: SparkSession, config: GraftConfig, name: String,
-      df: DataFrame): Prompts.TableCtx = {
+  private def describe(spark: SparkSession, config: GraftConfig, name: String, df: DataFrame) = {
     val frames = described.getOrElseUpdate(spark,
       (config.anonymizeHead, config.exactRowCount), SessionMemo.weakFrames())
     Option(frames.get(df)).getOrElse {
       val ctx = Prompts.describe(name, df, anonymize = config.anonymizeHead,
         exactRowCount = config.exactRowCount)
-      frames.put(df, ctx)
-      ctx
+      frames.put(df, ctx); ctx
     }.copy(name = name)
   }
 }

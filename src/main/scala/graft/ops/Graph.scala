@@ -364,7 +364,6 @@ object Graph {
       val wh = scratch(s"graft_rec_idx_$tag")
       val idxTbl = s"graft_rec_sims_$tag"
       val e0 = cachedPairs(s, d)
-      // the eager checkpoint makes `out` independent of the dropped table
       dropAfter(s, wh, idxTbl) {
         // stream the sims build STRAIGHT into the bucketed writer (r12
         // verdict task 1b): inside this query the matrix is consumed

@@ -59,18 +59,32 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("a query that throws after saving its scratch table still drops it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scratch").toString
-    val tbl = s"graft_scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    val err = intercept[IllegalStateException] {
-      ops.dropAfter(spark, dir, tbl) {
-        spark.range(3).write.option("path", s"$dir/t").saveAsTable(tbl)
-        assert(spark.catalog.tableExists(tbl))
-        throw new IllegalStateException("failed mid-query")
-      }
+    def saved(): (String, String) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_scratch").toString
+      val tbl = s"graft_scratch_${java.util.UUID.randomUUID().toString.take(8)}"
+      spark.range(3).write.option("path", s"$dir/t").saveAsTable(tbl)
+      (dir, tbl)
     }
-    assert(err.getMessage == "failed mid-query", "the query's own error surfaces")
-    assert(!spark.catalog.tableExists(tbl), "the scratch table outlives its failed query")
-    assert(!new java.io.File(dir).exists, "the scratch dir outlives its failed query")
+    def gone(dir: String, tbl: String) =
+      !spark.catalog.tableExists(tbl) && !new java.io.File(dir).exists
+    // `no such table!` does not parse, so its DROP throws ahead of the real
+    // table's: the query's own error still surfaces, with the failed DROP
+    // suppressed into it, and the rest of the cleanup still runs
+    for (bad <- Seq(Nil, Seq("no such table!"))) {
+      val (dir, tbl) = saved()
+      val err = intercept[IllegalStateException] {
+        ops.dropAfter(spark, dir, bad :+ tbl: _*)(throw new IllegalStateException("failed mid-query"))
+      }
+      assert(err.getMessage == "failed mid-query", "the query's own error surfaces")
+      assert(err.getSuppressed.length == bad.size, err.getSuppressed.toSeq)
+      assert(gone(dir, tbl), s"the scratch outlives its failed query (with $bad)")
+    }
+    // a query that succeeded reports its failed cleanup, after finishing it
+    val (dir, tbl) = saved()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ops.dropAfter(spark, dir, "no such table!", tbl)(1)
+    }
+    assert(gone(dir, tbl), "a failed DROP stops the remaining cleanup")
   }
 
   test("q_dedup_index: bucketed band index probes with zero corpus-side exchange") {

@@ -1534,21 +1534,31 @@ class OpsSpec extends SparkSpec {
   }
 
   test("no memo keyed on SparkSession lives outside SessionMemo") {
-    // a map construction (`new …Map[`, `…Map.empty[`, `TrieMap[`) whose
-    // first type argument (the key) names SparkSession or DataFrame, in any
-    // main source but the registry itself
+    // a map whose first type argument (the key) names SparkSession or
+    // DataFrame, in any main source but the registry itself: any
+    // `TrieMap[`/`WeakHashMap[` in any form, and any other `…Map[`
+    // that is constructed: `new …Map[`, `…Map.empty[`, or applied
+    // (`mutable.HashMap[K, V]()`). A bare type such as `java.util.Map[K, V]`
+    // (a memo's value type) is not a construction.
     import scala.jdk.CollectionConverters._
-    val opener = raw"\bnew\s+[\w.]*Map\s*\[|\b\w*Map\s*\.\s*empty\s*\[|\bTrieMap\s*\[".r
+    val opener = raw"(\bnew\s+)?\b([\w.]*Map)\s*(\.\s*empty\s*)?\[".r
     val keyed = raw"\b(?:SparkSession|DataFrame|Dataset)\b".r
-    def keyType(src: String, open: Int): String = {
+    // the key type, and the index of the `]` closing the type arguments
+    def typeArgs(src: String, open: Int): (String, Int) = {
       var depth = 0
+      var keyEnd = -1
       var i = open
-      while (!(depth == 1 && (src(i) == ',' || src(i) == ']'))) {
+      while (i < src.length && (i == open || depth > 0)) {
         if (src(i) == '[' || src(i) == '(') depth += 1
         if (src(i) == ']' || src(i) == ')') depth -= 1
+        if (keyEnd < 0 && (depth == 0 || (depth == 1 && src(i) == ','))) keyEnd = i
         i += 1
       }
-      src.substring(open + 1, i)
+      (src.substring(open + 1, if (keyEnd < 0) i else keyEnd), i - 1)
+    }
+    def applied(src: String, close: Int): Boolean = {
+      val next = src.indexWhere(!_.isWhitespace, close + 1)
+      next >= 0 && src(next) == '('
     }
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root))
@@ -1558,9 +1568,14 @@ class OpsSpec extends SparkSpec {
       .filterNot(_.getFileName.toString == "SessionMemo.scala")
     val strays = sources.flatMap { p =>
       val src = java.nio.file.Files.readString(p)
-      opener.findAllMatchIn(src)
-        .filter(m => keyed.findFirstIn(keyType(src, m.end - 1)).isDefined)
-        .map(m => s"$p: ${src.substring(m.start, m.end)}")
+      opener.findAllMatchIn(src).flatMap { m =>
+        val (key, close) = typeArgs(src, m.end - 1)
+        val built = m.group(1) != null || m.group(3) != null ||
+          m.group(2).split('.').last.matches("TrieMap|WeakHashMap") || applied(src, close)
+        if (keyed.findFirstIn(key).isDefined && built)
+          Some(s"$p: ${src.substring(m.start, close + 1)}")
+        else None
+      }
     }
     assert(sources.nonEmpty)
     assert(strays.isEmpty, s"declare these with SessionMemo: $strays")
