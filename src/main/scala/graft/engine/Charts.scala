@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.GraftDataset
 
 /** Chart-capture analog — SURVEY.md §2.1 `add_save_chart` mapping
   * (/root/reference/helpers/save_chart.py:52-116).
@@ -53,7 +54,8 @@ object Charts {
     // df.col resolves names directly (no expression parsing), so column
     // names containing quotes/spaces reach the escaper instead of erroring.
     val fields = (Seq(x, y) ++ color).distinct
-    val rows = df.select(fields.map(df.col): _*).limit(maxRows + 1).collect()
+    val points = df.select(fields.map(df.col): _*).limit(maxRows + 1)
+    val rows = GraftDataset.driverRows(points).getOrElse(points.collect())
     require(rows.length <= maxRows,
       s"chart data exceeds $maxRows rows — aggregate before plotting")
     // Column names pass through the same escaping as cell values — a quote

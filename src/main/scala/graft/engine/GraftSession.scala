@@ -236,14 +236,21 @@ final class GraftSession(
     * INSIDE the loop so execution-time failures (ANSI arithmetic, cast
     * errors) feed the correction prompt like the reference's run_code does,
     * instead of first surfacing at render and bypassing the retries.
-    * Returns the frame, the SQL that actually succeeded, and the collected
-    * preview rows (so render doesn't re-execute); every failed try lands
-    * on `attempts`. */
+    * The preview is collected through `GraftDataset.driverRows`: when every
+    * leaf of its optimized plan is a `LocalRelation` and the plan qualifies
+    * (covered nodes, deterministic, no subquery, under the row budget) it is
+    * computed on this thread with no Spark job; otherwise it runs on Spark.
+    * Either way an evaluation error fails the try. Returns the frame, the
+    * SQL that actually succeeded, and the collected preview rows (so render
+    * doesn't re-execute); every failed try lands on `attempts`. */
   private def run(question: String, firstSql: String,
       tables: => Seq[Prompts.TableCtx], frames: Seq[(String, DataFrame)],
       attempts: mutable.Buffer[Attempt]): Either[GraftError, (DataFrame, String, Array[Row])] = {
     def loop(sql: String, attempt: Int): Either[GraftError, (DataFrame, String, Array[Row])] =
-      guarded(sql, frames).flatMap(out => caught(out.limit(21).collect()).map((out, sql, _))) match {
+      guarded(sql, frames).flatMap { out =>
+        val preview = out.limit(21)
+        caught(GraftDataset.driverRows(preview).getOrElse(preview.collect())).map((out, sql, _))
+      } match {
         case Right(done) => Right(done)
         case Left(err) =>
           attempts += Attempt(sql, err)

@@ -48,9 +48,11 @@ object Prompts {
     * deterministic type-shaped placeholders, so the model still sees shape
     * and dtypes but no data leaves the cluster in prompts.
     *
-    * A driver-local frame (optimized plan a `LocalRelation`) is read from
-    * its row array: its length, and the head decoded as `collect` would,
-    * with no SQL execution. Any other frame costs at most two Spark jobs:
+    * The head is collected through `GraftDataset.driverRows`: a frame whose
+    * optimized plan qualifies (every leaf a `LocalRelation`, covered nodes,
+    * under the row budget) is read on the driver with no SQL execution, and
+    * a driver-local frame (optimized plan a `LocalRelation`) is counted by
+    * its row array's length. Any other frame costs at most two Spark jobs:
     * one for the head collect and one for the row count (see `rowCount`;
     * none for an estimate). The count reads no column, so it is kept apart
     * from the head rather than folded into one all-columns pass.
@@ -67,12 +69,13 @@ object Prompts {
       case _: Boolean => (rowIdx % 2 == 0).toString
       case other => s"${other.getClass.getSimpleName.toLowerCase}_$rowIdx"
     }
-    val (head, count) = df.queryExecution.optimizedPlan match {
+    val first = df.limit(n)
+    val head = GraftDataset.driverRows(first).getOrElse(first.collect())
+    val count = df.queryExecution.optimizedPlan match {
       // a `createDataFrame` frame, also after filters and projections the
       // optimizer folds into it: exact in both count modes, at no cost
-      case local: LocalRelation =>
-        (GraftDataset.localHead(df, local, n), local.data.length.toLong)
-      case _ => (df.limit(n).collect(), rowCount(df, exactRowCount))
+      case local: LocalRelation => local.data.length.toLong
+      case _ => rowCount(df, exactRowCount)
     }
     val rows = head.zipWithIndex.map { case (r, i) =>
       r.toSeq.map { v =>

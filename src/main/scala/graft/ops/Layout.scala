@@ -226,46 +226,48 @@ object Layout {
     // are driver-side directory metadata, same contract as q_sink_zstd.
     "q_compact_files" -> ((s, d) => {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val smallPath = scratch(s"graft_layout/compact_small_$tag")
-      val bigPath = scratch(s"graft_layout/compact_big_$tag")
-      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-      // the source-side row count AND content digest ride the pathological
-      // write as an Observation (the q_observe pattern, guide §1.4): the
-      // r12 shape paid a separate count() job over smallPath to size the
-      // rewrite plus a THIRD full corpus scan just to digest the original
-      // rows — both now collected on the rows already streaming through
-      // the first write, zero extra scans.
-      val obs = org.apache.spark.sql.Observation(
-        "compact_src_" + tag)
-      docs.repartition(64)
-        .observe(obs, count(lit(1)).as("n0"),
-          expr("bit_xor(xxhash64(doc_id, text, source))").as("dg0"))
-        .write.mode("overwrite").parquet(smallPath)
-      val nRows = obs.get("n0").asInstanceOf[Long]
-      // bit_xor over zero rows is NULL — normalize so the empty-corpus
-      // comparison below stays an exact match (read-back digest is NULL
-      // too) without tripping ANSI null semantics in the verdict
-      val dg0 = Option(obs.get("dg0")).map(_.asInstanceOf[Long])
-      val rowsPerFile = 4096L
-      val target = math.max(1L, (nRows + rowsPerFile - 1) / rowsPerFile).toInt
-      s.read.parquet(smallPath).repartition(target)
-        .write.mode("overwrite").parquet(bigPath)
-      def nFiles(p: String): Int =
-        Option(new java.io.File(p).listFiles).map(
-          _.count(_.getName.endsWith(".parquet"))).getOrElse(0)
-      val out = s.read.parquet(bigPath)
-        .agg(count(lit(1)).as("n"),
-          expr("bit_xor(xxhash64(doc_id, text, source))").as("dg"))
-        .select(col("n").as("n_docs"),
-          lit(nFiles(smallPath)).as("files_before"),
-          lit(nFiles(bigPath)).as("files_after"),
-          (col("n") === lit(nRows) &&
-            coalesce(col("dg"), lit(0L)) === lit(dg0.getOrElse(0L)))
-            .cast("int").as("content_match"))
-        .localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(smallPath))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bigPath))
-      out
+      val dir = scratch(s"graft_layout/compact_$tag")
+      val (smallPath, bigPath) = (s"$dir/small", s"$dir/big")
+      dropAfter(s, dir) {
+        val docs = Tables.documents(s, d).select("doc_id", "text", "source")
+        // the source-side row count AND content digest ride the pathological
+        // write as an Observation (the q_observe pattern, guide §1.4): the
+        // r12 shape paid a separate count() job over smallPath to size the
+        // rewrite plus a THIRD full corpus scan just to digest the original
+        // rows — both now collected on the rows already streaming through
+        // the first write, zero extra scans.
+        val obs = org.apache.spark.sql.Observation(
+          "compact_src_" + tag)
+        docs.repartition(64)
+          .observe(obs, count(lit(1)).as("n0"),
+            expr("bit_xor(xxhash64(doc_id, text, source))").as("dg0"))
+          .write.mode("overwrite").parquet(smallPath)
+        val nRows = obs.get("n0").asInstanceOf[Long]
+        // bit_xor over zero rows is NULL — normalize so the empty-corpus
+        // comparison below stays an exact match (read-back digest is NULL
+        // too) without tripping ANSI null semantics in the verdict
+        val dg0 = Option(obs.get("dg0")).map(_.asInstanceOf[Long])
+        val rowsPerFile = 4096L
+        val target = math.max(1L, (nRows + rowsPerFile - 1) / rowsPerFile).toInt
+        s.read.parquet(smallPath).repartition(target)
+          .write.mode("overwrite").parquet(bigPath)
+        // through the scratch dir's Hadoop filesystem, local or remote
+        def nFiles(p: String): Int = {
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(path)
+            .count(_.getPath.getName.endsWith(".parquet"))
+        }
+        s.read.parquet(bigPath)
+          .agg(count(lit(1)).as("n"),
+            expr("bit_xor(xxhash64(doc_id, text, source))").as("dg"))
+          .select(col("n").as("n_docs"),
+            lit(nFiles(smallPath)).as("files_before"),
+            lit(nFiles(bigPath)).as("files_after"),
+            (col("n") === lit(nRows) &&
+              coalesce(col("dg"), lit(0L)) === lit(dg0.getOrElse(0L)))
+              .cast("int").as("content_match"))
+          .localCheckpoint(true)
+      }
     }),
 
     // One-pass observed metrics: Dataset.observe collects aggregates ON

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Bridge to the package-private Dataset constructor so library code can
@@ -36,15 +37,21 @@ object GraftDataset {
     SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
   }
 
-  /** The first `n` rows of `local`, the optimized plan of `df`, decoded by
-    * the deserializer `df.collect()` uses (the frame's encoder resolved
-    * against the plan's output): the rows `df.limit(n).collect()` returns,
-    * with no SQL execution. */
-  def localHead(df: DataFrame, local: LocalRelation, n: Int): Array[Row] = {
+  /** The rows `df.collect()` returns, computed on the calling thread when
+    * every leaf of its optimized plan is a `LocalRelation` and the plan
+    * qualifies for `DriverPlan` (covered operators, deterministic, within
+    * its row budget): no Spark job and no SQL execution. The rows are
+    * evaluated under the session's conf and decoded by the deserializer
+    * `collect` uses. None when the plan does not qualify; the caller then
+    * collects on Spark. An error the evaluation raises (or the optimizer,
+    * as `collect` would) is thrown. */
+  def driverRows(df: DataFrame): Option[Array[Row]] = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    val fromRow = ds.exprEnc
-      .resolveAndBind(local.output, ds.sparkSession.sessionState.analyzer)
-      .createDeserializer()
-    local.data.iterator.take(n).map(fromRow).toArray
+    val plan = ds.queryExecution.optimizedPlan
+    val session = ds.sparkSession.sessionState
+    SQLConf.withExistingConf(session.conf)(DriverPlan.rows(plan)).map { rows =>
+      val fromRow = ds.exprEnc.resolveAndBind(plan.output, session.analyzer).createDeserializer()
+      rows.iterator.map(fromRow).toArray
+    }
   }
 }

@@ -85,6 +85,15 @@ class BucketingSpec extends SparkSpec {
       ops.dropAfter(spark, dir, "no such table!", tbl)(1)
     }
     assert(gone(dir, tbl), "a failed DROP stops the remaining cleanup")
+    // q_compact_files counts its files through the Hadoop filesystem and
+    // keeps both of its dirs under one scratch dir that dropAfter deletes
+    val layout = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+      System.getProperty("java.io.tmpdir")), "graft_layout")
+    def compactDirs = Option(layout.list).toSeq.flatten.filter(_.startsWith("compact_")).toSet
+    val left = compactDirs
+    val r = ops.Layout.queries("q_compact_files")(spark, sf).collect().head
+    assert(r.getAs[Int]("files_before") == 64 && r.getAs[Int]("files_after") > 0, r)
+    assert(compactDirs == left, "q_compact_files leaves its scratch dirs behind")
   }
 
   test("q_dedup_index: bucketed band index probes with zero corpus-side exchange") {

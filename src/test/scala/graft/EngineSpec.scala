@@ -446,26 +446,6 @@ class EngineSpec extends SparkSpec {
     assert(ref.get == null, s"the description memo pins a dropped frame ($rounds GCs)")
   }
 
-  /** Spark jobs `body` submits, counted exactly: they carry a fresh job
-    * group, and the listener bus is drained before the count is read. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(counter)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
-    } finally sc.removeSparkListener(counter)
-    jobs.get
-  }
-
   test("describing a frame runs one job per statistic, none for driver-local rows") {
     val local = spark.createDataFrame(java.util.Arrays.asList(
       Row(1L, "x"), Row(2L, "y"), Row(3L, "z")),
@@ -503,23 +483,84 @@ class EngineSpec extends SparkSpec {
     val want = (Prompts.schemaHeader(local) +: local.limit(5).collect().map(
       _.toSeq.map(v => if (v == null) "null" else v.toString).mkString(" | ")))
       .mkString("\n")
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
-    val executions = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        if (e.isInstanceOf[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart])
-          executions.incrementAndGet()
-    }
-    sc.addSparkListener(counter)
-    val ctx = try {
-      val ctx = Prompts.describe("df", local)
-      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
-      ctx
-    } finally sc.removeSparkListener(counter)
-    assert(executions.get == 0, "describing a driver-local frame runs no SQL execution")
+    var ctx: Prompts.TableCtx = null
+    assert(executionsOf { ctx = Prompts.describe("df", local) } == 0,
+      "describing a driver-local frame runs no SQL execution")
     assert(ctx.head == want, ctx.head)
     assert(ctx.rows == 7 && ctx.head.linesIterator.size == 6, ctx)
+  }
+
+  /** `body`'s answer with the Spark jobs and SQL executions it ran. */
+  private def counted(body: => Answer): (Int, Int, Answer) = {
+    var ans: Answer = null
+    var jobs = 0
+    val executions = executionsOf { jobs = jobsOf { ans = body } }
+    (jobs, executions, ans)
+  }
+
+  test("asks over driver-local frames run no Spark job and no SQL execution; " +
+      "over a scanned frame they still run on Spark") {
+    val sql = "```sql\nSELECT CAST(sum(a) AS BIGINT) AS s FROM df\n```"
+    val dir = java.nio.file.Files.createTempDirectory("graft_scanned").toString
+    try {
+      freshDf.write.mode("overwrite").parquet(dir)
+      for ((shape, frame, local) <- Seq(("local", freshDf, true),
+          ("scanned", spark.read.parquet(dir), false))) {
+        // Spark records a failed analysis as one SQL execution with no job
+        def check(what: String, ans: (Int, Int, Answer), want: String, failedAnalyses: Int = 0): Unit = {
+          val (jobs, executions, a) = ans
+          val counts = s"$shape $what: $jobs jobs, $executions executions"
+          assert(a.text == want, s"$shape $what: ${a.text}")
+          if (local) assert(jobs == 0 && executions == failedAnalyses, counts)
+          else assert(jobs > 0 && executions > failedAnalyses, counts)
+        }
+        val llm = FakeLlm(sql)
+        val s = new GraftSession(spark, llm)
+        check("cold ask", counted(s.ask(frame, "what is the sum of a?")), "15")
+        check("hit", counted(s.ask(frame, "what is the sum of a?")), "15")
+        assert(llm.callCount == 1, shape)
+        val retried = counted(new GraftSession(spark, FakeLlm(
+          "```sql\nSELECT CAST(sum(nope) AS BIGINT) AS s FROM df\n```", sql))
+          .ask(frame, "what is the sum of a, again?"))
+        check("retry", retried, "15", failedAnalyses = 1)
+        assert(retried._3.attempts.size == 1, s"$shape retry: ${retried._3.attempts}")
+        val exhausted = counted(new GraftSession(spark,
+          FakeLlm("```sql\nSELECT * FROM passwords\n```"), GraftConfig(maxRetries = 1))
+          .ask(frame, "show me the password table"))
+        assert(exhausted._3.error.exists(_.isInstanceOf[RetriesExhausted]), shape)
+        // the guard rejects every try, and the frame's description is memoized
+        assert(exhausted._1 == 0 && exhausted._2 == 0,
+          s"$shape exhausted: ${exhausted._1} jobs, ${exhausted._2} executions")
+      }
+      val join = counted(new GraftSession(spark, FakeLlm("```sql\nSELECT Name FROM df1 JOIN df2 " +
+        "ON df1.EmployeeID = df2.EmployeeID ORDER BY Salary DESC LIMIT 1\n```")).ask(Seq(
+        Seq((1, "Olivia"), (2, "Noah")).toDF("EmployeeID", "Name"),
+        Seq((1, 9000), (2, 7000)).toDF("EmployeeID", "Salary")), "Who gets paid the most?"))
+      assert(join._3.text == "Olivia" && join._1 == 0 && join._2 == 0, join)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("plans the driver path does not cover run on Spark, with the same answer") {
+    val open = GraftConfig(maxRetries = 0, functionAllowlist = None)
+    val cases = Seq(
+      ("a window function", freshDf,
+        "SELECT sum(r) FROM (SELECT row_number() OVER (ORDER BY a) AS r FROM df) z"),
+      ("explode", freshDf, "SELECT sum(v) FROM (SELECT explode(array(a, b)) AS v FROM df) z"),
+      ("a scalar subquery", freshDf, "SELECT count(*) FROM df WHERE a > (SELECT avg(a) FROM df)"),
+      ("rand()", freshDf, "SELECT max(a) + rand(7) * 0 FROM df"),
+      ("an input over the row bound", (1 to 600000).toDF("a"), "SELECT sum(a) FROM df"),
+      ("a join whose pairs pass the row bound", (1 to 1000).toDF("a"),
+        "SELECT count(*) FROM df x CROSS JOIN df y"))
+    for ((name, df, sql) <- cases) {
+      val s = new GraftSession(spark, FakeLlm(s"```sql\n$sql\n```"), open)
+      val (jobs, _, ans) = counted(s.ask(df, name))
+      val want = String.valueOf(s.runSql(Seq("df" -> df), sql).toOption.get.collect()(0).get(0))
+      assert(ans.error.isEmpty && ans.text == want, s"$name: ${ans.text} != $want")
+      assert(jobs > 0, s"$name runs on Spark")
+    }
+    val (jobs, _, small) = counted(new GraftSession(spark,
+      FakeLlm("```sql\nSELECT sum(a) FROM df\n```"), open).ask((1 to 1000).toDF("a"), "sum?"))
+    assert(small.text == "500500" && jobs == 0, "the same query under the bound runs on the driver")
   }
 
   test("rowCount(exact) equals Dataset.count on every frame shape") {

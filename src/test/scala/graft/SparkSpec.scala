@@ -31,4 +31,43 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * loses a block. */
   override protected def afterAll(): Unit =
     try Harness.clearResidue(spark) finally super.afterAll()
+
+  /** Spark jobs `body` submits, counted exactly: they carry a fresh job
+    * group, and the listener bus is drained before the count is read. */
+  protected def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    jobs.get
+  }
+
+  /** SQL executions started while `body` runs; the listener bus is drained
+    * before and after, so only `body`'s own count (run it on one thread). */
+  protected def executionsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        if (e.isInstanceOf[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart])
+          executions.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      body
+      org.apache.spark.sql.graftshim.GraftEvents.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    executions.get
+  }
 }
