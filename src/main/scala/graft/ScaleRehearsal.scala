@@ -199,8 +199,9 @@ object ScaleRehearsal {
     val sfTag =
       new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + (sfCanon.hashCode.toLong & 0xffffffffL).toHexString
-    val scratch = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_scale_x${mult}_$sfTag").getAbsolutePath
+    // under SPARK_GRAFT_SCRATCH when set (else java.io.tmpdir); the chunk
+    // caches below move files with java.io, so that root must be local
+    val scratch = ops.scratch(s"graft_scale_x${mult}_$sfTag")
     val bigDir = s"$scratch/corpus"
     val base = Tables.documents(spark, sfDir)
     val big = (0 until mult).map(replica(base, _)).reduce(_ unionByName _)
@@ -429,8 +430,7 @@ object ScaleRehearsal {
       // the corpus as per-partition containers, read it back through the
       // binaryFile+decode path — both sides must scale linearly in rows
       "avro_roundtrip" -> { d: String =>
-        val p = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), "graft_scale_avro").toString
+        val p = ops.scratch("graft_scale_avro")
         graft.sources.AvroIO.write(
           Tables.documents(spark, d).select("doc_id", "text")
             .repartition(32), p)

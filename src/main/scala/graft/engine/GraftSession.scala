@@ -237,12 +237,16 @@ final class GraftSession(
     * errors) feed the correction prompt like the reference's run_code does,
     * instead of first surfacing at render and bypassing the retries.
     * The preview is collected through `GraftDataset.driverRows`: when every
-    * leaf of its optimized plan is a `LocalRelation` and the plan qualifies
-    * (covered nodes, deterministic, no subquery, under the row budget) it is
-    * computed on this thread with no Spark job; otherwise it runs on Spark.
-    * Either way an evaluation error fails the try. Returns the frame, the
-    * SQL that actually succeeded, and the collected preview rows (so render
-    * doesn't re-execute); every failed try lands on `attempts`. */
+    * leaf of its optimized plan is a `LocalRelation` or a `OneRowRelation`
+    * and the plan qualifies (covered nodes, deterministic, no subquery,
+    * under the row budget) it is computed on this thread with no Spark job;
+    * otherwise it runs on Spark. There a frame that reads one split of
+    * files is bound as `Repartition(1, shuffle = false)` (`SqlGuard.accept`),
+    * so an aggregate, DISTINCT or ORDER BY over it runs as one job with no
+    * exchange, and the returned frame (`Answer.df`) carries that
+    * `Coalesce 1`. Either way an evaluation error fails the try. Returns the
+    * frame, the SQL that actually succeeded, and the collected preview rows
+    * (so render doesn't re-execute); every failed try lands on `attempts`. */
   private def run(question: String, firstSql: String,
       tables: => Seq[Prompts.TableCtx], frames: Seq[(String, DataFrame)],
       attempts: mutable.Buffer[Attempt]): Either[GraftError, (DataFrame, String, Array[Row])] = {
@@ -355,7 +359,8 @@ final class GraftSession(
 
   /** Guarded SQL passthrough: run caller-supplied SQL through the same
     * SqlGuard sandbox as LLM-generated SQL, against the given tables. For
-    * callers who want the safety rails without the LLM round-trip. */
+    * callers who want the safety rails without the LLM round-trip. A
+    * single-split table is bound as one partition, as in an ask. */
   def runSql(tables: Seq[(String, DataFrame)], sql: String): Either[GraftError, DataFrame] =
     guarded(sql, tables).left.map(BadSql(_))
 }

@@ -5,7 +5,8 @@ import scala.util.control.NoStackTrace
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedGenerator, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression, UnresolvedNamedLambdaVariable, WindowSpecDefinition}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, SubqueryAlias, UnresolvedWith, WithWindowDefinition}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, Repartition, SubqueryAlias, UnresolvedWith, WithWindowDefinition}
+import org.apache.spark.sql.graftshim.GraftDataset
 
 /** Pre-execution SQL validation — SURVEY.md §2.1 `_clean_code` /
   * `_check_imports` mapping (/root/reference/polarsai/__init__.py:403-430,
@@ -226,7 +227,17 @@ object SqlGuard {
   /** The plan `sql` parses to, checked, with each relation naming a frame
     * replaced by that frame's analyzed plan — or why it is refused. The
     * walk does not enter a frame's plan: it is the caller's, not generated,
-    * and holds nodes outside the allowlist. */
+    * and holds nodes outside the allowlist.
+    *
+    * A frame that reads one split of files (`GraftDataset.singleSplit`: its
+    * own plan a chain of single-child nodes with no exchange and no required
+    * distribution, ending in one non-bucketed file scan of one partition
+    * whose files total at most `spark.sql.files.maxPartitionBytes`) is bound
+    * as `Repartition(1, shuffle = false, plan)`: its `Coalesce 1` reports a
+    * single partition, so an aggregate, DISTINCT, ORDER BY, window or
+    * shuffled join over it plans no exchange. The scan still runs in its one
+    * task; joined to a multi-split frame, both sides are still
+    * hash-partitioned to `spark.sql.shuffle.partitions`. */
   def accept(spark: SparkSession, sql: String, frames: Seq[(String, DataFrame)],
       functionAllowlist: Option[Set[String]] = None): Either[String, LogicalPlan] =
     guard(spark, sql, frames, Set.empty, functionAllowlist)
@@ -258,7 +269,8 @@ object SqlGuard {
     * plan bypass) — are walked with the scope of the node that holds them.
     *
     * A relation name means, in this order: a CTE visible at that point; a
-    * frame, bound as `SubqueryAlias(name, frame plan)`; a view of
+    * frame, bound as `SubqueryAlias(name, frame plan)` (the plan under
+    * `Repartition(1)` for a single-split frame, see [[accept]]); a view of
     * `views`, left unbound; else the plan is refused.
     *
     * @param functionAllowlist when set, ONLY these function names may be
@@ -363,7 +375,10 @@ object SqlGuard {
           val name = r.multipartIdentifier.mkString(".").toLowerCase
           if (ctes(name)) r
           else byName.get(name) match {
-            case Some((n, df)) => SubqueryAlias(n, df.queryExecution.analyzed)
+            case Some((n, df)) =>
+              val plan = df.queryExecution.analyzed
+              SubqueryAlias(n,
+                if (GraftDataset.singleSplit(df)) Repartition(1, shuffle = false, plan) else plan)
             case None if viewsLower(name) => r
             case None =>
               val scope = ctes ++ byName.keySet ++ viewsLower

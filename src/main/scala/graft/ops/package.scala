@@ -5,7 +5,7 @@ package object ops {
   /** Scratch path `name` for files and tables a query writes. On a cluster
     * set SPARK_GRAFT_SCRATCH to a shared filesystem (HDFS/S3/NFS) visible
     * to every executor; the local tmpdir is only correct in local mode. */
-  private[ops] def scratch(name: String): String =
+  private[graft] def scratch(name: String): String =
     sys.env.get("SPARK_GRAFT_SCRATCH").map(root => s"${root.stripSuffix("/")}/$name")
       .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name).toString)
 

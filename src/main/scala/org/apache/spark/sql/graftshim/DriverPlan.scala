@@ -15,7 +15,8 @@ import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
   * thread with Catalyst's interpreted evaluators (the mode Spark itself
   * runs when codegen is off) instead of as Spark jobs.
   *
-  * A plan qualifies when every leaf is a `LocalRelation`, every node is
+  * A plan qualifies when every leaf is a `LocalRelation` or a
+  * `OneRowRelation` (a FROM-less SELECT: one row with no column), every node is
   * one of Project, Filter, Aggregate, Join (inner, cross, outer, semi, anti,
   * existence), Sort, Limit, Offset, Union and Expand, and no expression is
   * nondeterministic, a subquery or otherwise unevaluable, and every key it
@@ -52,6 +53,7 @@ private[graftshim] object DriverPlan {
 
   private def covered(node: LogicalPlan): Boolean = (node match {
     case l: LocalRelation => !l.isStreaming
+    case _: OneRowRelation => true
     // (analysis has checked that limit and offset expressions are foldable)
     case _: Project | _: Filter | _: Aggregate | _: Sort | _: Union | _: Expand |
         _: GlobalLimit | _: LocalLimit | _: Offset => true
@@ -103,6 +105,7 @@ private[graftshim] object DriverPlan {
   private def eval(plan: LogicalPlan, run: LogicalPlan => Iterator[InternalRow],
       touch: Long => Unit): Iterator[InternalRow] = plan match {
     case l: LocalRelation => l.data.iterator
+    case _: OneRowRelation => Iterator.single(new GenericInternalRow(0))
     case Project(list, child) =>
       val proj = new InterpretedProjection(list, child.output)
       run(child).map(proj)

@@ -1,7 +1,11 @@
 package org.apache.spark.sql.graftshim
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.{CollectLimitExec, CollectTailExec, FileSourceScanExec, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -37,8 +41,44 @@ object GraftDataset {
     SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
   }
 
+  /** Whether `df` reads one split of files and needs no exchange of its own,
+    * so that it can be bound into a larger plan as `Repartition(1, shuffle =
+    * false)`: its `CoalesceExec(1)` reports `SinglePartition`, so an
+    * aggregate, DISTINCT, ORDER BY, window or shuffled join over it plans no
+    * exchange, while the scan runs in the one task it runs in anyway.
+    *
+    * True when its physical plan (`queryExecution.sparkPlan`, planned once
+    * per frame) is a chain of single-child nodes, none of which is an
+    * exchange, a top-level LIMIT/OFFSET form or requires a child
+    * distribution, ending in one non-bucketed file scan whose input RDD has
+    * one partition and whose files total at most
+    * `spark.sql.files.maxPartitionBytes`. Files that can be split already
+    * fit that bound when they make one split; it matters for files that
+    * cannot, such as `.csv.gz`. False for a streaming frame, and for one
+    * whose planning fails: unwrapped, its plan raises that error when run. */
+  def singleSplit(df: DataFrame): Boolean = {
+    def scan(p: SparkPlan): Option[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Some(s).filterNot(_.bucketedScan)
+      // bound inside a plan, the top-level forms of LIMIT and OFFSET gather
+      // their input to one partition through an exchange
+      case _: Exchange | _: CollectLimitExec | _: CollectTailExec | _: TakeOrderedAndProjectExec =>
+        None
+      case _ => p.children match {
+        case Seq(child) if p.requiredChildDistribution.forall(_ == UnspecifiedDistribution) =>
+          scan(child)
+        case _ => None
+      }
+    }
+    val qe = df.queryExecution
+    !df.isStreaming && (try scan(qe.sparkPlan).exists { s =>
+      s.inputRDD.getNumPartitions == 1 &&
+        s.selectedPartitions.totalFileSize <= qe.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    } catch { case NonFatal(_) => false })
+  }
+
   /** The rows `df.collect()` returns, computed on the calling thread when
-    * every leaf of its optimized plan is a `LocalRelation` and the plan
+    * every leaf of its optimized plan is a `LocalRelation` or a
+    * `OneRowRelation` and the plan
     * qualifies for `DriverPlan` (covered operators, deterministic, within
     * its row budget): no Spark job and no SQL execution. The rows are
     * evaluated under the session's conf and decoded by the deserializer

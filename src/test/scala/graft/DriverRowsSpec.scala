@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.engine._
@@ -11,11 +11,56 @@ import graft.engine._
   * (`runSql`), and a runtime failure must carry the same error class. The
   * plans the driver path leaves to Spark run there, with the same answer. */
 class DriverRowsSpec extends SparkSpec {
+  import DriverRowsSpec._
 
-  private def frame(ddl: String, rows: Row*): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType.fromDDL(ddl))
+  private lazy val tables = Seq("t" -> frame(spark, T), "u" -> frame(spark, U), "w" -> frame(spark, W))
 
-  private lazy val t = frame("id INT, g STRING, x BIGINT, amt DECIMAL(10,2), f DOUBLE, s STRING",
+  /** (name, SQL): FROM-less SELECTs, whose plans read a `OneRowRelation`. */
+  private val fromLess = Seq(
+    ("a FROM-less select", "SELECT 1 + 1 AS two"),
+    ("a union with a FROM-less select", "SELECT g FROM t UNION SELECT 'PEAR'"))
+
+  /** (name, SQL): plans that key on a collated string, where bytes are not
+    * values ('Apple' and 'apple' are one key under UTF8_LCASE), so they run
+    * on Spark. */
+  private val onSpark = Seq(
+    ("group by a collated key", "SELECT count(*) AS n FROM w GROUP BY s COLLATE UTF8_LCASE"),
+    ("count distinct over a collated column",
+      "SELECT count(DISTINCT s COLLATE UTF8_LCASE) AS n FROM w"),
+    ("union over a collated column", "SELECT count(*) AS n FROM " +
+      "(SELECT s COLLATE UTF8_LCASE AS c FROM w UNION SELECT upper(s) COLLATE UTF8_LCASE FROM w) z"),
+    ("join on a collated key", "SELECT count(*) AS n FROM w a JOIN w b " +
+      "ON a.s COLLATE UTF8_LCASE = b.s"))
+
+  for ((name, sql, ordered) <- corpus) test(s"driver rows equal Spark's: $name") {
+    assert(check(name, sql, ordered) == 0, "the ask runs on the driver: no Spark job")
+  }
+
+  for ((name, sql) <- fromLess) test(s"driver rows equal Spark's: $name") {
+    assert(check(name, sql, ordered = false) == 0, "the ask runs on the driver: no Spark job")
+  }
+
+  for ((name, sql) <- onSpark) test(s"runs on Spark with Spark's answer: $name") {
+    assert(check(name, sql, ordered = false) > 0, "the ask runs on Spark")
+  }
+
+  /** Asks `sql` and compares the answer with Spark's collect of the same
+    * SQL; returns the Spark jobs the ask submitted. */
+  private def check(name: String, sql: String, ordered: Boolean): Int = {
+    val session = new GraftSession(spark, FakeLlm(s"```sql\n$sql\n```"), GraftConfig(maxRetries = 0))
+    var ans: Answer = null
+    val jobs = jobsOf { ans = session.askNamed(tables, name) }
+    sameAnswer(ans, session.runSql(tables, sql).fold(e => fail(e.message), identity), ordered)
+    jobs
+  }
+}
+
+object DriverRowsSpec {
+  import org.scalatest.Assertions._
+
+  /** (DDL, rows) of the frames `t` and `u` the corpus reads, and of `w`,
+    * the mixed-case strings the collated cases read. */
+  val T: (String, Seq[Row]) = ("id INT, g STRING, x BIGINT, amt DECIMAL(10,2), f DOUBLE, s STRING", Seq(
     Row(1, "a", 3L, BigDecimal("10.25").bigDecimal, 1.5, "7"),
     Row(2, "b", 5L, BigDecimal("3.10").bigDecimal, 0.25, "x"),
     Row(3, "a", null, BigDecimal("7.00").bigDecimal, 2.75, "12"),
@@ -24,16 +69,19 @@ class DriverRowsSpec extends SparkSpec {
     Row(6, "b", 8L, BigDecimal("0.01").bigDecimal, null, "q"),
     Row(7, "a", 1L, BigDecimal("1.50").bigDecimal, 3.0, "3"),
     Row(8, "b", 6L, BigDecimal("4.40").bigDecimal, Double.NaN, "6"),
-    Row(null, "c", 4L, BigDecimal("2.25").bigDecimal, 1.5, "8"))
-  private lazy val u = frame("id INT, k STRING, y INT",
+    Row(null, "c", 4L, BigDecimal("2.25").bigDecimal, 1.5, "8")))
+  val U: (String, Seq[Row]) = ("id INT, k STRING, y INT", Seq(
     Row(1, "a", 4), Row(2, "b", 9), Row(2, "z", 1), Row(null, "c", 6),
-    Row(5, null, 2), Row(9, "a", 7))
-  private lazy val w = frame("s STRING",
-    Row("Apple"), Row("apple"), Row("APPLE"), Row("pear"), Row("Pear"), Row(null))
-  private lazy val tables = Seq("t" -> t, "u" -> u, "w" -> w)
+    Row(5, null, 2), Row(9, "a", 7)))
+  val W: (String, Seq[Row]) = ("s STRING", Seq(
+    Row("Apple"), Row("apple"), Row("APPLE"), Row("pear"), Row("Pear"), Row(null)))
+
+  /** `table` as a `createDataFrame` frame. */
+  def frame(spark: SparkSession, table: (String, Seq[Row])): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(table._2: _*), StructType.fromDDL(table._1))
 
   /** (name, SQL, whether its ORDER BY is total). */
-  private val corpus = Seq(
+  val corpus = Seq(
     ("group by", "SELECT g, count(*) AS n, sum(x) AS sx, min(s) AS ms FROM t GROUP BY g", false),
     ("having", "SELECT g, sum(x) AS sx FROM t GROUP BY g HAVING sum(x) > 5 " +
       "ORDER BY g NULLS FIRST", true),
@@ -98,56 +146,31 @@ class DriverRowsSpec extends SparkSpec {
     ("overflow", "SELECT sum(x) + 9223372036854775807 AS s FROM t", false),
     ("invalid cast", "SELECT CAST(max(s) AS INT) AS n FROM t", false))
 
-  /** (name, SQL): plans that key on a collated string, where bytes are not
-    * values ('Apple' and 'apple' are one key under UTF8_LCASE), so they run
-    * on Spark. */
-  private val onSpark = Seq(
-    ("group by a collated key", "SELECT count(*) AS n FROM w GROUP BY s COLLATE UTF8_LCASE"),
-    ("count distinct over a collated column",
-      "SELECT count(DISTINCT s COLLATE UTF8_LCASE) AS n FROM w"),
-    ("union over a collated column", "SELECT count(*) AS n FROM " +
-      "(SELECT s COLLATE UTF8_LCASE AS c FROM w UNION SELECT upper(s) COLLATE UTF8_LCASE FROM w) z"),
-    ("join on a collated key", "SELECT count(*) AS n FROM w a JOIN w b " +
-      "ON a.s COLLATE UTF8_LCASE = b.s"))
-
   /** `GraftSession`'s rendering of a preview: a 1×1 result as its scalar,
     * otherwise a header and up to 20 tab-separated rows. */
-  private def render(cols: Array[String], head: Array[Row]): String =
+  def render(cols: Array[String], head: Array[Row]): String =
     if (head.length == 1 && cols.length == 1) String.valueOf(head(0).get(0))
     else (cols.mkString("\t") +: head.take(20).map(_.toSeq.map(String.valueOf).mkString("\t")))
       .mkString("\n") + (if (head.length > 20) "\n…" else "")
 
   private val errorClass = "\\[([A-Z_]+(?:\\.[A-Z_]+)?)\\]".r
-  private def classOf(message: String): Option[String] =
+  def classOf(message: String): Option[String] =
     errorClass.findFirstMatchIn(message).map(_.group(1))
 
-  for ((name, sql, ordered) <- corpus) test(s"driver rows equal Spark's: $name") {
-    assert(check(name, sql, ordered) == 0, "the ask runs on the driver: no Spark job")
-  }
-
-  for ((name, sql) <- onSpark) test(s"runs on Spark with Spark's answer: $name") {
-    assert(check(name, sql, ordered = false) > 0, "the ask runs on Spark")
-  }
-
-  /** Asks `sql` and compares the answer with Spark's collect of the same
-    * SQL; returns the Spark jobs the ask submitted. */
-  private def check(name: String, sql: String, ordered: Boolean): Int = {
-    val session = new GraftSession(spark, FakeLlm(s"```sql\n$sql\n```"), GraftConfig(maxRetries = 0))
-    var ans: Answer = null
-    val jobs = jobsOf { ans = session.askNamed(tables, name) }
-    val out = session.runSql(tables, sql).fold(e => fail(e.message), identity)
-    scala.util.Try(out.limit(21).collect()) match {
+  /** Asserts that `ans` is the ask's rendering of `want`'s first 21 rows
+    * (in any row order unless `ordered`), or, when collecting them fails,
+    * an error of the same class. */
+  def sameAnswer(ans: Answer, want: DataFrame, ordered: Boolean): Unit =
+    scala.util.Try(want.limit(21).collect()) match {
       case scala.util.Failure(e) =>
-        val want = classOf(String.valueOf(e.getMessage))
-        assert(want.isDefined, e.getMessage)
-        assert(ans.error.isDefined && classOf(ans.error.get.message) == want, ans.text)
+        val cls = classOf(String.valueOf(e.getMessage))
+        assert(cls.isDefined, e.getMessage)
+        assert(ans.error.isDefined && classOf(ans.error.get.message) == cls, ans.text)
       case scala.util.Success(rows) =>
         assert(ans.error.isEmpty, ans.text)
-        val want = render(out.columns, rows)
-        if (ordered || rows.length <= 1) assert(ans.text == want)
-        else assert(ans.text.linesIterator.toSeq.sorted == want.linesIterator.toSeq.sorted,
-          s"\n${ans.text}\n---- Spark:\n$want")
+        val text = render(want.columns, rows)
+        if (ordered || rows.length <= 1) assert(ans.text == text)
+        else assert(ans.text.linesIterator.toSeq.sorted == text.linesIterator.toSeq.sorted,
+          s"\n${ans.text}\n---- Spark:\n$text")
     }
-    jobs
-  }
 }

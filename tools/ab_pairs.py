@@ -7,8 +7,11 @@ change wins at least nine tenths of the pairs run (ties count for neither),
 the medians differ, in the better direction, by more than the distance
 between the parent's quartiles, and the change fails no more operations in
 total than the parent. A side whose run errored or printed "correct": false
-loses its pair. Also prints how far the change's median sits from the
-parent's, as a share of it, next to the BENCHMARK.json bound.
+loses its pair. Also prints the median and quartiles of the per-pair
+difference (change - parent, over the pairs where both sides ran correctly),
+which a seed-to-seed spread larger than the gain does not hide, and how far
+the change's median sits from the parent's, as a share of it, next to the
+BENCHMARK.json bound.
 
     python3 tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload ask_serial \\
         --seeds 201-210
@@ -47,8 +50,10 @@ def summarize(pairs, better, failed=(0, 0)):
     run; a side whose run errored or was not correct holds None and loses
     the pair. `better` is "lower" or "higher"; `failed` is each side's
     (parent, change) failed operations summed over its runs. Returns each
-    side's quartiles, the change's wins and ties, and whether the pairs
-    show a gain."""
+    side's quartiles, the quartiles of the per-pair difference (change -
+    parent, over the pairs where both sides hold a value), the change's wins
+    and ties, and whether the pairs show a gain. The difference does not
+    enter the verdict."""
     sign = 1 if better == "lower" else -1
 
     def won(p, c):
@@ -58,11 +63,12 @@ def summarize(pairs, better, failed=(0, 0)):
     ties = sum(1 for p, c in pairs if p is not None and p == c)
     parent = quartiles([p for p, _ in pairs if p is not None])
     change = quartiles([c for _, c in pairs if c is not None])
+    diff = quartiles([c - p for p, c in pairs if p is not None and c is not None])
     gain = (failed[1] <= failed[0] and wins >= 0.9 * len(pairs) and
             sign * (parent[1] - change[1]) > parent[2] - parent[0])
     worse = sign * (change[1] - parent[1]) / parent[1] if parent[1] else float("nan")
     return {"n": len(pairs), "wins": wins, "ties": ties, "parent": parent,
-            "change": change, "gain": gain, "worse_by": worse}
+            "change": change, "diff": diff, "gain": gain, "worse_by": worse}
 
 
 def run(checkout, workload, seed, seconds):
@@ -109,7 +115,8 @@ def main():
                       (failed["parent"], failed["change"]))
         fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}-{q[2]:.4g}]"
         print(f"{a.workload} {m['name']:14s} parent {fmt(r['parent'])}"
-              f"  change {fmt(r['change'])}  change wins {r['wins']}/{r['n']}"
+              f"  change {fmt(r['change'])}  change-parent {fmt(r['diff'])}"
+              f"  change wins {r['wins']}/{r['n']}"
               f" (ties {r['ties']})  gain {r['gain']}"
               f"  worse by {r['worse_by']:+.1%} (bound {m['bound']:.0%})")
     print(f"{a.workload} failed operations  parent {failed['parent']}"

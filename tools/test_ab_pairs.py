@@ -76,6 +76,24 @@ class SummarizeTest(unittest.TestCase):
         r = summarize([(4.0, None)] * 10, "lower")
         self.assertEqual(r["wins"], 0)
         self.assertFalse(r["gain"])
+        self.assertTrue(all(v != v for v in r["diff"]))  # NaN: no pair
+
+    def test_paired_difference_shows_a_gain_the_seed_spread_hides(self):
+        # the parent spreads 3.0-4.8 s across seeds; every pair is 0.6 s
+        # lower on the change: the difference's quartiles are tight while
+        # the verdict, which compares the medians, stays as it was
+        pairs = [(3.0 + i / 5, 2.4 + i / 5) for i in range(10)]
+        r = summarize(pairs, "lower")
+        for got in r["diff"]:
+            self.assertAlmostEqual(got, -0.6)
+        self.assertEqual(r["wins"], 10)
+        self.assertFalse(r["gain"])
+
+    def test_paired_difference_skips_pairs_missing_a_side(self):
+        pairs = [(4.0, 3.0), (5.0, 4.5), (6.0, 6.5), (None, 1.0), (3.0, None)]
+        q1, med, q3 = summarize(pairs, "lower")["diff"]
+        self.assertEqual(med, -0.5)
+        self.assertEqual((q1, q3), quartiles([-1.0, -0.5, 0.5])[::2])
 
 
 if __name__ == "__main__":
