@@ -56,6 +56,21 @@ object ScaleRehearsal {
   private def widthForMult(m: Int): Int =
     8 + math.ceil(math.log(math.max(m, 1)) / math.log(2)).toInt
 
+  /** `path` as a local filesystem path. The rehearsal builds and moves its
+    * corpus caches with java.io, which would read `hdfs://…` as a relative
+    * local path while Spark writes beside it on the remote filesystem, so a
+    * scratch root with a scheme other than `file` is refused. */
+  private[graft] def localScratch(path: String): String = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    Option(uri.getScheme) match {
+      case None => path
+      case Some("file") => uri.getPath
+      case Some(_) => throw new IllegalArgumentException(
+        s"ScaleRehearsal moves its scratch files with java.io and needs a local " +
+          s"scratch root; set SPARK_GRAFT_SCRATCH to a local directory, not $path")
+    }
+  }
+
   private def jsonStr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       // ALL control chars (not just \n\r\t): one raw U+0000-001F in an
@@ -199,9 +214,8 @@ object ScaleRehearsal {
     val sfTag =
       new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + (sfCanon.hashCode.toLong & 0xffffffffL).toHexString
-    // under SPARK_GRAFT_SCRATCH when set (else java.io.tmpdir); the chunk
-    // caches below move files with java.io, so that root must be local
-    val scratch = ops.scratch(s"graft_scale_x${mult}_$sfTag")
+    // under SPARK_GRAFT_SCRATCH when set (else java.io.tmpdir)
+    val scratch = localScratch(ops.scratch(s"graft_scale_x${mult}_$sfTag"))
     val bigDir = s"$scratch/corpus"
     val base = Tables.documents(spark, sfDir)
     val big = (0 until mult).map(replica(base, _)).reduce(_ unionByName _)

@@ -240,8 +240,9 @@ final class GraftSession(
     * leaf of its optimized plan is a `LocalRelation` or a `OneRowRelation`
     * and the plan qualifies (covered nodes, deterministic, no subquery,
     * under the row budget) it is computed on this thread with no Spark job;
-    * otherwise it runs on Spark. There a frame that reads one split of
-    * files is bound as `Repartition(1, shuffle = false)` (`SqlGuard.accept`),
+    * otherwise it runs on Spark. There a frame that reads one file of at
+    * most `spark.sql.files.openCostInBytes` (4 MB by default) is bound as
+    * `Repartition(1, shuffle = false)` (`SqlGuard.accept`),
     * so an aggregate, DISTINCT or ORDER BY over it runs as one job with no
     * exchange, and the returned frame (`Answer.df`) carries that
     * `Coalesce 1`. Either way an evaluation error fails the try. Returns the
@@ -359,8 +360,8 @@ final class GraftSession(
 
   /** Guarded SQL passthrough: run caller-supplied SQL through the same
     * SqlGuard sandbox as LLM-generated SQL, against the given tables. For
-    * callers who want the safety rails without the LLM round-trip. A
-    * single-split table is bound as one partition, as in an ask. */
+    * callers who want the safety rails without the LLM round-trip. A table
+    * that reads one small file is bound as one partition, as in an ask. */
   def runSql(tables: Seq[(String, DataFrame)], sql: String): Either[GraftError, DataFrame] =
     guarded(sql, tables).left.map(BadSql(_))
 }

@@ -229,14 +229,15 @@ object SqlGuard {
     * walk does not enter a frame's plan: it is the caller's, not generated,
     * and holds nodes outside the allowlist.
     *
-    * A frame that reads one split of files (`GraftDataset.singleSplit`: its
-    * own plan a chain of single-child nodes with no exchange and no required
-    * distribution, ending in one non-bucketed file scan of one partition
-    * whose files total at most `spark.sql.files.maxPartitionBytes`) is bound
-    * as `Repartition(1, shuffle = false, plan)`: its `Coalesce 1` reports a
-    * single partition, so an aggregate, DISTINCT, ORDER BY, window or
-    * shuffled join over it plans no exchange. The scan still runs in its one
-    * task; joined to a multi-split frame, both sides are still
+    * A frame that reads one small file (`GraftDataset.singleSplit`: its own
+    * plan a chain of single-child nodes with no exchange and no required
+    * distribution, ending in one non-bucketed file scan of one file of at
+    * most `spark.sql.files.openCostInBytes`, 4 MB by default, and at most
+    * `spark.sql.files.maxPartitionBytes`) is bound as `Repartition(1,
+    * shuffle = false, plan)`: its `Coalesce 1` reports a single partition,
+    * so an aggregate, DISTINCT, ORDER BY, window or shuffled join over it
+    * plans no exchange and runs in one task. The scan still runs in its one
+    * task; joined to a frame that is not bound so, both sides are still
     * hash-partitioned to `spark.sql.shuffle.partitions`. */
   def accept(spark: SparkSession, sql: String, frames: Seq[(String, DataFrame)],
       functionAllowlist: Option[Set[String]] = None): Either[String, LogicalPlan] =

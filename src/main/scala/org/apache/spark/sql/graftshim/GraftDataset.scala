@@ -41,7 +41,7 @@ object GraftDataset {
     SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
   }
 
-  /** Whether `df` reads one split of files and needs no exchange of its own,
+  /** Whether `df` reads one small file and needs no exchange of its own,
     * so that it can be bound into a larger plan as `Repartition(1, shuffle =
     * false)`: its `CoalesceExec(1)` reports `SinglePartition`, so an
     * aggregate, DISTINCT, ORDER BY, window or shuffled join over it plans no
@@ -50,12 +50,16 @@ object GraftDataset {
     * True when its physical plan (`queryExecution.sparkPlan`, planned once
     * per frame) is a chain of single-child nodes, none of which is an
     * exchange, a top-level LIMIT/OFFSET form or requires a child
-    * distribution, ending in one non-bucketed file scan whose input RDD has
-    * one partition and whose files total at most
-    * `spark.sql.files.maxPartitionBytes`. Files that can be split already
-    * fit that bound when they make one split; it matters for files that
-    * cannot, such as `.csv.gz`. False for a streaming frame, and for one
-    * whose planning fails: unwrapped, its plan raises that error when run. */
+    * distribution, ending in one non-bucketed file scan that reads one file
+    * of at most `spark.sql.files.openCostInBytes` (4 MB by default) and at
+    * most `spark.sql.files.maxPartitionBytes`. Spark never cuts a split
+    * smaller than the lesser of the two, so that file is one split on any
+    * session; and the operators above the scan, which then run in its one
+    * task, read at most that many bytes. A larger frame keeps the
+    * `spark.sql.shuffle.partitions` tasks its exchanges give it. The test
+    * reads the scan's file listing and builds no reader. False for a
+    * streaming frame, and for one whose planning fails: unwrapped, its plan
+    * raises that error when run. */
   def singleSplit(df: DataFrame): Boolean = {
     def scan(p: SparkPlan): Option[FileSourceScanExec] = p match {
       case s: FileSourceScanExec => Some(s).filterNot(_.bucketedScan)
@@ -70,9 +74,11 @@ object GraftDataset {
       }
     }
     val qe = df.queryExecution
+    val conf = qe.sparkSession.sessionState.conf
     !df.isStreaming && (try scan(qe.sparkPlan).exists { s =>
-      s.inputRDD.getNumPartitions == 1 &&
-        s.selectedPartitions.totalFileSize <= qe.sparkSession.sessionState.conf.filesMaxPartitionBytes
+      val files = s.selectedPartitions
+      files.totalNumberOfFiles == 1 &&
+        files.totalFileSize <= math.min(conf.filesOpenCostInBytes, conf.filesMaxPartitionBytes)
     } catch { case NonFatal(_) => false })
   }
 

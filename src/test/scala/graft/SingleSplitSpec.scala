@@ -11,13 +11,14 @@ import org.apache.spark.sql.types.StructType
 
 import graft.engine._
 
-/** Asks over frames that read one split of files: `DriverRowsSpec`'s
-  * frames `t` and `u`, each written as one parquet file. The guard binds
+/** Asks over frames that read one small file: `DriverRowsSpec`'s frames
+  * `t` and `u`, each written as one parquet file. The guard binds
   * such a frame as `Repartition(1, shuffle = false)`, so an aggregate,
   * DISTINCT or ORDER BY over it runs as one Spark job; every corpus query
   * must answer as `spark.sql` does over temp views of the same files (the
-  * unwrapped plan). Frames that read more than one split, carry an exchange
-  * of their own or are bucketed are bound as they are. */
+  * unwrapped plan). Frames that read more than one file or a file larger
+  * than `spark.sql.files.openCostInBytes`, carry an exchange of their own or
+  * are bucketed are bound as they are. */
 class SingleSplitSpec extends SparkSpec {
   import DriverRowsSpec._
 
@@ -45,7 +46,9 @@ class SingleSplitSpec extends SparkSpec {
   private val bucketed = "single_split_bucketed"
 
   override protected def afterAll(): Unit =
-    try spark.sql(s"DROP TABLE IF EXISTS $bucketed") finally super.afterAll()
+    try spark.sql(s"DROP TABLE IF EXISTS $bucketed")
+    finally try org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    finally super.afterAll()
 
   private def session(sql: String) =
     new GraftSession(spark, FakeLlm(s"```sql\n$sql\n```"), GraftConfig(maxRetries = 0))
@@ -94,17 +97,24 @@ class SingleSplitSpec extends SparkSpec {
     }
   }
 
-  test("a file that cannot be split is bound unwrapped past spark.sql.files.maxPartitionBytes") {
-    val path = s"$dir/t_csv_gz"
-    spark.read.parquet(tPath).write.option("compression", "gzip").csv(path)
-    def gz = spark.read.schema(StructType.fromDDL(T._1)).csv(path)
-    assert(GraftDataset.singleSplit(gz))
-    val key = "spark.sql.files.maxPartitionBytes"
+  /** Whether `df` is bound as one partition with conf `key` at `value`. */
+  private def singleSplitWith(key: String, value: String)(df: => DataFrame): Boolean = {
     val was = spark.conf.get(key)
-    spark.conf.set(key, "64")
-    try assert(!GraftDataset.singleSplit(gz))
-    finally spark.conf.set(key, was)
+    spark.conf.set(key, value)
+    try GraftDataset.singleSplit(df) finally spark.conf.set(key, was)
   }
+
+  for (key <- Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes"))
+    test(s"a file larger than $key is bound unwrapped, split or not") {
+      val path = s"$dir/t_csv_gz"
+      if (!new java.io.File(path).exists)
+        spark.read.parquet(tPath).write.option("compression", "gzip").csv(path)
+      def gz = spark.read.schema(StructType.fromDDL(T._1)).csv(path)
+      def parquet = spark.read.parquet(tPath)
+      assert(GraftDataset.singleSplit(gz) && GraftDataset.singleSplit(parquet))
+      assert(!singleSplitWith(key, "64")(gz))
+      assert(!singleSplitWith(key, "64")(parquet))
+    }
 
   test("a single-split frame joined to a multi-split one hash-partitions both sides") {
     val frames = Seq("t" -> tables.head._2, "u" -> spark.read.parquet(write("u3", U, files = 3)))
